@@ -259,44 +259,59 @@ object Gen {
     * [[graft.pipeline.ExtractJob]]. */
   def urlOf(t: Turn): String = TranscriptGen.urlOf(t.conv_id, t.turn_idx, t.tool)
 
-  /** One slot of the `doc_api` round design: a page kind, and the size
-    * and depth strata (of `strata` equal strata) its page is drawn from. */
-  final case class Slot(kind: String, sizeStratum: Int, depthStratum: Int, strata: Int)
+  /** One slot of the `doc_api` round design: a page kind, the size and
+    * depth strata (of `strata` equal strata) its page is drawn from, and
+    * the slot's phase in the within-stratum sequence. */
+  final case class Slot(kind: String, sizeStratum: Int, depthStratum: Int, strata: Int,
+                        phase: Double)
 
   /** Every round of new `doc_api` pages holds each kind at its share
     * (article 7, forum 4, weixin 3, unhinted 6 of 20). Within a kind, each
     * page covers one stratum of the log-uniform size range and one
-    * stratum of the depth range, paired by a fixed permutation. The
-    * design is the same under every seed, so any prefix of the request
-    * stream has nearly the same cost profile. */
+    * stratum of the depth range, paired by a fixed permutation. Phases
+    * are spread over the slots (by stratum within a kind, by a quarter
+    * between kinds), so the four largest pages of a round never all sit
+    * at the top of their strata at once and every round costs about the
+    * same. The design is the same under every seed, so any prefix of the
+    * request stream has nearly the same cost profile. */
   val Design: Array[Slot] = {
     val r = new SplittableRandom(20L)
-    Seq("article" -> 7, "forum" -> 4, "weixin" -> 3, Unhinted -> 6).flatMap { case (k, c) =>
-      val depth = shuffle(r, (0 until c).toArray)
-      (0 until c).map(i => Slot(k, i, depth(i), c))
+    Seq("article" -> 7, "forum" -> 4, "weixin" -> 3, Unhinted -> 6).zipWithIndex.flatMap {
+      case ((k, c), ki) =>
+        val depth = shuffle(r, (0 until c).toArray)
+        (0 until c).map(i => Slot(k, i, depth(i), c, i.toDouble / c + ki / 4.0))
     }.toArray
   }
   val RoundRepeats = 5
   private val ZipfS = 1.1
 
+  /** Design slots by size-stratum midpoint, in `RoundRepeats` groups of
+    * equal size: repeat j of a round repeats a page of group j. */
+  val RepeatGroups: Array[Array[Int]] =
+    Design.indices.sortBy(c => (Design(c).sizeStratum + 0.5) / Design(c).strata).toArray
+      .grouped(Design.length / RoundRepeats).toArray
+
   /** The page of slot `s` in round `round`. Its place within its size
     * and depth strata follows a fixed low-discrepancy sequence over
-    * rounds rather than the seed, so every run of k rounds covers the
-    * strata the same way and the latency distribution, median included,
-    * does not move with the seed; the seed picks the page's content. */
+    * rounds, shifted by the slot's phase, rather than the seed, so every
+    * run of k rounds covers the strata the same way and the latency
+    * distribution, median included, does not move with the seed; the
+    * seed picks the page's content. */
   private def designPage(r: SplittableRandom, s: Slot, round: Int, maxBytes: Int,
                          maxDepth: Int, id: String): Page = {
     def frac(x: Double) = x - math.floor(x)
     val (a, b) = (math.log(1024), math.log(maxBytes))
-    val size = math.exp(a + (s.sizeStratum + frac((round + 1) * 0.6180339887)) / s.strata * (b - a))
-    val depth = 1 + ((s.depthStratum + frac((round + 1) * 0.4142135624)) / s.strata * maxDepth).toInt
+    val size = math.exp(a + (s.sizeStratum + frac((round + 1) * 0.6180339887 + s.phase)) / s.strata * (b - a))
+    val depth = 1 + ((s.depthStratum + frac((round + 1) * 0.4142135624 + s.phase)) / s.strata * maxDepth).toInt
     page(r, s.kind, size.toInt, depth, id)
   }
 
   /** `rounds` rounds of requests. Each round asks for one new page per
     * design slot (1-256 KB, nested 1-48 deep, 30% unhinted) and, after
     * the first round, repeats 5 pages of earlier rounds (20% of
-    * requests): repeat j targets a rotating design slot and picks among
+    * requests). Repeat j takes a slot of size group j, rotating with the
+    * round (upwards for even j, downwards for odd j, so a round's
+    * repeats cost about the same as the next round's), and picks among
     * that slot's earlier pages by Zipf rank, so the oldest are the
     * popular ones. Requests are shuffled within a round. Warm-up pages
     * are three more rounds of the design. */
@@ -313,7 +328,9 @@ object Gen {
         n - 1
       }
       val repeats = if (round == 0) Nil else (0 until RoundRepeats).map { j =>
-        val slot = (j * (Design.length / RoundRepeats) + round) % Design.length
+        val group = RepeatGroups(j)
+        val turn = round % group.length
+        val slot = group(if (j % 2 == 0) turn else group.length - 1 - turn)
         val rank = java.util.Arrays.binarySearch(cdf, 0, round, r.nextDouble() * cdf(round - 1))
         val earlier = math.min(round - 1, if (rank >= 0) rank else -rank - 1)
         earlier * Design.length + slot

@@ -39,4 +39,21 @@ class GenSpec extends AnyFunSuite {
     assert(in.pages.forall(p => p.depth >= 1 && p.depth <= 48 && p.html.length >= 1024))
     assert(in.pages.count(_.kind == Gen.Unhinted) == 10 * 6)
   }
+
+  test("doc_api rounds: one repeat per size group, nearly equal HTML bytes") {
+    val rounds = 40
+    val in = Gen.docApi(5, rounds)
+    val (fresh, per) = (Gen.Design.length, Gen.Design.length + Gen.RoundRepeats)
+    val bytes = (0 until rounds).map { round =>
+      val reqs = in.requests.slice(if (round == 0) 0 else fresh + (round - 1) * per, fresh + round * per)
+      val repeats = reqs.filter(_ < round * fresh).map(_ % fresh)
+      if (round > 0)
+        assert(repeats.map(s => Gen.RepeatGroups.indexWhere(_.contains(s))).sorted.toSeq ==
+          (0 until Gen.RoundRepeats))
+      reqs.map(in.pages(_).html.length.toDouble).sum
+    }.tail
+    val mean = bytes.sum / bytes.length
+    val cv = math.sqrt(bytes.map(b => (b - mean) * (b - mean)).sum / bytes.length) / mean
+    assert(cv < 0.15, s"round bytes vary by cv=$cv")
+  }
 }
