@@ -9,7 +9,7 @@ import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
   * nodes, string attribute maps, parent/child links. Built from
   * scratch — no HTML parser library ships with the sandbox Spark
   * distribution, and the engine only needs the operations in
-  * SURVEY.md §2 (select, remove, wrap, clone, text, serialize).
+  * SURVEY.md §2 (select, remove, wrap, text, serialize).
   */
 sealed trait DomNode {
   var parent: Element = _
@@ -77,7 +77,6 @@ final class Element(val tag: String) extends DomNode {
   def id: Option[String] = attrs.get("id")
 
   def appendChild(n: DomNode): Unit = { n.remove(); n.parent = this; children += n }
-  def prependChild(n: DomNode): Unit = { n.remove(); n.parent = this; children.insert(0, n) }
   def insertChild(i: Int, n: DomNode): Unit = { n.remove(); n.parent = this; children.insert(i, n) }
 
   def childIndex(n: DomNode): Int = children.indexWhere(_ eq n)
@@ -132,20 +131,8 @@ final class Element(val tag: String) extends DomNode {
 
   def depth: Int = ancestors.length
 
-  def deepClone: Element = {
-    val e = new Element(tag)
-    attrs.foreach { case (k, v) => e.attrs(k) = v }
-    children.foreach {
-      case c: Element     => e.appendChild(c.deepClone)
-      case t: TextNode    => e.appendChild(new TextNode(t.data))
-      case c: CommentNode => e.appendChild(new CommentNode(c.data))
-    }
-    e
-  }
-
   def select(selector: String): Seq[Element] = Selector.select(this, selector)
   def selectFirst(selector: String): Option[Element] = select(selector).headOption
-  def matches(selector: String): Boolean = Selector.matches(this, selector)
 
   /** True when the element has no children at all (CSS `:empty`:
     * any text node, even whitespace, makes it non-empty). */

@@ -3,9 +3,8 @@ package graft.extract
 /** Article extractor — /root/reference/app/lib/extractors/
   * ArticleExtractor.ts (live path only; preProcess is dead code).
   */
-class ArticleExtractor(fixedXpath: Boolean = false) extends BaseExtractor(
-    ExtractOptions(minTextLength = 150, minScore = 25,
-      fixedXpathStage = fixedXpath), "article") {
+class ArticleExtractor extends BaseExtractor(
+    ExtractOptions(minTextLength = 150, minScore = 25), "article") {
 
   override protected def getCustomSelectors: Seq[String] = Selectors.ArticleCustom
 
@@ -94,9 +93,8 @@ class ArticleExtractor(fixedXpath: Boolean = false) extends BaseExtractor(
   * content passes through unchanged; the conversation-level analogue
   * is graft.pipeline.Reassembly.
   */
-class ForumExtractor(fixedXpath: Boolean = false) extends BaseExtractor(
-    ExtractOptions(minTextLength = 50, minScore = 15, includeComments = true,
-      fixedXpathStage = fixedXpath), "forum") {
+class ForumExtractor extends BaseExtractor(
+    ExtractOptions(minTextLength = 50, minScore = 15), "forum") {
 
   override protected def getCustomSelectors: Seq[String] = Selectors.ForumCustom
 
@@ -144,9 +142,8 @@ class ForumExtractor(fixedXpath: Boolean = false) extends BaseExtractor(
   * WeixinExtractor.ts (live path; the weixin-specific preProcess
   * noise removal is dead code).
   */
-class WeixinExtractor(fixedXpath: Boolean = false) extends BaseExtractor(
-    ExtractOptions(minTextLength = 100, minScore = 20,
-      fixedXpathStage = fixedXpath), "weixin") {
+class WeixinExtractor extends BaseExtractor(
+    ExtractOptions(minTextLength = 100, minScore = 20), "weixin") {
 
   override protected def getCustomSelectors: Seq[String] = Selectors.WeixinCustom
 
@@ -201,27 +198,15 @@ class WeixinExtractor(fixedXpath: Boolean = false) extends BaseExtractor(
   * collapsed parse is semantically equivalent — and halves parse
   * cost, the dominant per-turn expense.
   */
-final class ExtractorSet(fixedXpath: Boolean = false) {
-  val article = new ArticleExtractor(fixedXpath)
-  val forum = new ForumExtractor(fixedXpath)
-  val weixin = new WeixinExtractor(fixedXpath)
+final class ExtractorSet {
+  val article = new ArticleExtractor
+  val forum = new ForumExtractor
+  val weixin = new WeixinExtractor
 
   def forType(t: String): BaseExtractor = t match {
     case "weixin" => weixin
     case "forum"  => forum
     case _        => article
-  }
-
-  /** URL-only dispatch (ExtractorFactory.ts:48-61
-    * `getExtractorByUrl`) — used when no HTML payload is available
-    * (e.g. routing rows with null/short `text`). Note the reference's
-    * url-only forum keyword list drops `topic` (present in
-    * detectPageType's url check, route.ts:157-161) — replicated. */
-  def forUrl(url: String): BaseExtractor = {
-    if (url.contains("mp.weixin.qq.com")) weixin
-    else if (url.contains("forum") || url.contains("bbs") ||
-             url.contains("thread")) forum
-    else article
   }
 
   /** route.ts:130-166 */
@@ -235,7 +220,10 @@ final class ExtractorSet(fixedXpath: Boolean = false) {
 
   /** Total per-turn extraction: guards become Left (quarantine row),
     * never a thrown task failure (route.ts error semantics mapped to
-    * row-level errors, SURVEY.md §2.1).
+    * row-level errors, SURVEY.md §2.1). The recursive DOM walks
+    * overflow the stack on pathologically deep nesting (thousands of
+    * unclosed `<div>`s); that is quarantined too, with a fixed message
+    * because StackOverflowError carries none.
     */
   def extract(html: String, url: String,
               renderFormats: Boolean = false): Either[String, ExtractResult] =
@@ -262,5 +250,7 @@ final class ExtractorSet(fixedXpath: Boolean = false) {
       }
     } catch {
       case e: Exception => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}")
+      case _: StackOverflowError =>
+        Left("StackOverflowError: document nesting too deep to extract")
     }
 }

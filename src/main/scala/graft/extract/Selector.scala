@@ -185,7 +185,4 @@ object Selector {
     }
     out.result()
   }
-
-  def matches(e: Element, selector: String): Boolean =
-    parseList(selector).exists(matchesComplex(e, _, null))
 }

@@ -53,19 +53,6 @@ object Selectors {
     ".reply-content", ".comment-content", ".response-content",
     "#thread-content", "#post-content", "[itemprop=\"articleBody\"]")
 
-  /** CSS equivalents of the six intended stage-1 XPath probes
-    * (/root/reference/app/lib/BaseExtractor.ts:609-616) — used only
-    * in the NON-PARITY fixedXpathStage mode (the reference's rewrite
-    * breaks them; ExtractOptions.fixedXpathStage). Each probe keeps
-    * the reference's within-probe document-order-first semantics. */
-  val FixedXpathProbes: Seq[String] = Seq(
-    "article[class*=\"content\"], article[class*=\"article\"]",
-    "div[class*=\"content\"], div[class*=\"article\"]",
-    "main[class*=\"content\"], main[class*=\"main\"]",
-    "section[class*=\"content\"], section[class*=\"article\"]",
-    "div#content, div#article, div#main-content",
-    "div[class*=\"post\"], div[class*=\"entry\"]")
-
   /** /root/reference/app/lib/extractors/WeixinExtractor.ts:24-33 */
   val WeixinCustom: Seq[String] = Seq(
     "#js_content", ".rich_media_content", ".rich_media_area_primary",

@@ -83,6 +83,10 @@ final class ParquetSnapshotStore(root: String) extends TranscriptStore {
       Future(metrics.write.mode(SaveMode.Overwrite)
         .parquet(staging.resolve("_metrics").toString)))), Duration.Inf)
     Files.writeString(staging.resolve("_buckets"), doneBuckets.mkString(","))
+    // a crash between the publish and the pointer swap leaves an
+    // orphaned snapshot=<next>; ids above _current are invisible to
+    // snapshotChain, so it is safe to clear it before the move
+    ParquetSnapshotStore.deleteTree(snapDir(next))
     // single atomic publish
     Files.move(staging, snapDir(next), StandardCopyOption.ATOMIC_MOVE)
     // catalog pointer swap (atomic)
@@ -98,6 +102,17 @@ final class ParquetSnapshotStore(root: String) extends TranscriptStore {
     require(dirs.nonEmpty, s"no committed snapshot under $root")
     spark.read.parquet(dirs: _*)
   }
+}
+
+object ParquetSnapshotStore {
+  /** Recursive delete; a missing `dir` is a no-op. */
+  private[pipeline] def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val paths = Files.walk(dir)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
 }
 
 /** Checkpointed, resumable extraction run (north rule). Buckets by
@@ -165,9 +180,7 @@ object CheckpointedExtract {
         store.commit(data, lineageOf(data), metricsOf(data), group)
       }.toSeq
     } finally {
-      import scala.jdk.CollectionConverters._
-      try Files.walk(staging).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
+      try ParquetSnapshotStore.deleteTree(staging)
       catch { case _: Throwable => () }
     }
   }

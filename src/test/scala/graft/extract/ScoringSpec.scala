@@ -66,6 +66,31 @@ class ScoringSpec extends AnyFunSuite {
     assert(w.calculateNodeScore(e) == 4 + 20 + 5)
   }
 
+  test("live weight tables: article.content scores 10 + 8 + text + paragraph") {
+    val e = Dom.element("article", "class" -> "content")
+    val p = new Element("p")
+    p.appendChild(new TextNode("x" * 250))
+    e.appendChild(p)
+    // tag article 10, class content +8, text 250 → +2, 1 <p> → +1
+    assert(base.calculateNodeScore(e) == 10 + 8 + 2 + 1)
+  }
+
+  test("heuristic argmax: div.content beats section.text at stage 4") {
+    // two candidates with byte-identical inner content, so only the
+    // tag/class weights differ: div.content 4+8=12, section.text
+    // 6+4=10; neither matches a stage-2/3 selector
+    def para(w: String) = s"<p>${(w + " ") * 12}end.</p>"
+    def body(w: String) = para(w) * 6
+    val html =
+      s"""<html><body>
+         |<div class="content">${body("alpha")}</div>
+         |<section class="text">${body("bravo")}</section>
+         |</body></html>""".stripMargin
+    val r = base.extract(html, "https://example.com/w")
+    assert(r.metrics.fallbackStage == 4)
+    assert(r.textContent.startsWith("alpha"))
+  }
+
   test("content score subtracts depth and clamps at 0") {
     val e = elem("<body><div><div><div class=\"sidebar ad\" id=\"deep\"></div></div></div></body>", "#deep")
     assert(base.calculateContentScore(e) == 0.0) // negative clamped

@@ -63,9 +63,14 @@ class PipelineSpec extends AnyFunSuite {
       Turn("c1", 0, "user", "<p>tiny</p>", "", ts),
       Turn("c1", 1, "user", "<html><body><article class=\"article-content\"><p>" +
         ("Perfectly good content sentence for extraction purposes here. " * 4) +
-        "</p></article></body></html>", "", ts)).toDF()
+        "</p></article></body></html>", "", ts),
+      // nesting that overflows the engine's stack: a quarantine row,
+      // not a failed task (and so a failed job)
+      Turn("c1", 2, "user", "<html><body>" + "<div>" * 100000 +
+        ("Deeply nested text that is long enough to pass the input length guard. " * 2),
+        "", ts)).toDF()
     val out = ExtractJob.runTyped(spark, turns, renderFormats = false).toDF()
-    assert(out.filter(col("error").isNotNull).count() == 1)
+    assert(out.filter(col("error").isNotNull).count() == 2)
     assert(out.filter(col("error").isNull).count() == 1)
   }
 

@@ -50,6 +50,27 @@ class StoreSpec extends AnyFunSuite {
     assert(CheckpointedExtract.run(spark, turns, store, buckets = 8).isEmpty)
   }
 
+  test("resume: an orphaned unpublished snapshot does not block the next commit") {
+    val dir = Files.createTempDirectory("graft-store-orphan").toString
+    val store = new ParquetSnapshotStore(dir)
+    val firstHalf = turns.filter(
+      pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
+    val ext = ExtractJob.run(spark, firstHalf)
+    store.commit(ext, CheckpointedExtract.lineageOf(ext),
+      CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
+    // a crash between the publish rename and the pointer swap leaves
+    // snapshot=<current+1> on disk, unreferenced by _current
+    val orphan = java.nio.file.Paths.get(dir,
+      s"snapshot=${store.currentSnapshot().get + 1}", "data")
+    Files.createDirectories(orphan)
+    Files.writeString(orphan.resolve("junk"), "partial")
+    assert(store.committedBuckets() == Set(0, 1, 2, 3))
+    val snaps = CheckpointedExtract.run(spark, turns, store, buckets = 8, bucketsPerCommit = 4)
+    assert(snaps == Seq(1L))
+    assert(store.committedBuckets() == (0 until 8).toSet)
+    assert(fingerprint(store.readData(spark)) == fingerprint(ExtractJob.run(spark, turns)))
+  }
+
   test("empty input still commits every todo bucket (resume/empty-corpus)") {
     // the one-pass rewrite stages the extracted slice with partitionBy;
     // a zero-row slice writes no data files, so the read-back must use
