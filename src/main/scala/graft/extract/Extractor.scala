@@ -1,7 +1,5 @@
 package graft.extract
 
-import scala.collection.mutable
-
 /** Extraction options — the two thresholds the reference's live path
   * reads from ExtractorOptions
   * (/root/reference/app/types/extractor.ts:19-24; defaults
@@ -51,7 +49,7 @@ final case class ExtractResult(
   *    conversation-level reassembly is a Spark op instead
   *    (graft.pipeline.Reassembly).
   *
-  * Instances are stateful per call (droppedNodes, counters) — use one
+  * Instances are stateful per call (document, counters) — use one
   * instance per thread/partition, like the reference's cached
   * singletons but partition-scoped (SURVEY.md §7.1).
   */
@@ -64,8 +62,6 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
   /** Main-content element of the LAST extractDoc call — lets the
     * facade render output formats without re-parsing `content`. */
   private[extract] var lastMainContent: Element = _
-  private val dropped = mutable.Set.empty[Int] // identity hashes of dropped elements
-  private def droppedKey(e: Element): Int = System.identityHashCode(e)
   protected var nodesScored: Int = 0
   protected var fallbackStage: Int = 0
 
@@ -83,7 +79,6 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
   /** Run the pipeline on an already-parsed (pre-collapsed) document. */
   def extractDoc(d: Element, url: String): ExtractResult = {
     doc = d
-    dropped.clear()
     nodesScored = 0
     fallbackStage = 0
     val origTextLen = doc.text.trim.length
@@ -179,13 +174,11 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
 
   /** BaseExtractor.ts:362-386 — guarded delete. */
   protected def removeNode(e: Element): Unit = {
-    if (dropped.contains(droppedKey(e))) return
     val textLength = textLengthOf(e)
     val linkLength = e.select("a").headOption.map(textLengthOf).getOrElse(0)
     val linkDensity = linkLength.toDouble / textLength // NaN when 0/0, like JS
     if (linkDensity > 0.5 || textLength < options.minTextLength) {
       e.remove()
-      dropped += droppedKey(e)
     }
   }
 
@@ -232,10 +225,8 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
     var best: Element = null
     var maxScore = -1.0
     doc.select("div, article, section, main").foreach { e =>
-      if (!dropped.contains(droppedKey(e))) {
-        val score = calculateContentScore(e)
-        if (score > maxScore) { maxScore = score; best = e }
-      }
+      val score = calculateContentScore(e)
+      if (score > maxScore) { maxScore = score; best = e }
     }
     if (best != null && isValidContent(best)) Some(best) else None
   }

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.extract.{ExtractorSet, MarkdownRenderer, TextRenderer}
+import graft.extract.ExtractorSet
 
 /** The core Spark job: transcript table → per-turn extraction
   * (SURVEY.md §2.10, the north rule's engine).
@@ -28,10 +28,12 @@ import graft.extract.{ExtractorSet, MarkdownRenderer, TextRenderer}
   */
 object ExtractJob {
 
-  def extractTurn(ex: ExtractorSet, t: Turn, renderFormats: Boolean): ExtractedTurn = {
+  /** One turn through the engine, markdown and plain-text renderings
+    * included. */
+  def extractTurn(ex: ExtractorSet, t: Turn): ExtractedTurn = {
     val url = TranscriptGen.urlOf(t.conv_id, t.turn_idx, t.tool)
     val t0 = System.nanoTime()
-    ex.extract(t.text, url, renderFormats) match {
+    ex.extract(t.text, url, renderFormats = true) match {
       case Right(r) =>
         ExtractedTurn(
           conv_id = t.conv_id, turn_idx = t.turn_idx, role = t.role,
@@ -51,21 +53,20 @@ object ExtractJob {
     }
   }
 
-  /** @param repartitionInput salted hash repartition by
-    *   (conv_id, turn_idx % salt) — required for unbucketed input
-    *   with skewed conversations. Pass false when the input is
-    *   already well-partitioned (production: an Iceberg table
-    *   bucketed by conv_id — the whole point of that layout is that
-    *   this shuffle is elided; extraction is per-turn pure, so
-    *   results are identical either way).
+  /** Extract every turn of `turns` into [[ExtractedTurn]] rows.
+    *
+    * @param repartitionInput salted hash repartition by
+    *   (conv_id, turn_idx % salt) into `spark.sql.shuffle.partitions`
+    *   partitions — required for unbucketed input with skewed
+    *   conversations. Pass false when the input is already
+    *   well-partitioned (production: an Iceberg table bucketed by
+    *   conv_id — the whole point of that layout is that this shuffle
+    *   is elided; extraction is per-turn pure, so results are
+    *   identical either way).
     */
-  def runTyped(spark: SparkSession, turns: DataFrame,
-               numPartitions: Int = 0,
-               renderFormats: Boolean = true,
-               repartitionInput: Boolean = true): Dataset[ExtractedTurn] = {
+  def run(spark: SparkSession, turns: DataFrame,
+          repartitionInput: Boolean = true): DataFrame = {
     import spark.implicits._
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
     val typed = turns
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         col("tool"), col("ts"))
@@ -74,18 +75,14 @@ object ExtractJob {
       if (repartitionInput)
         // salted: conv_id alone would put a whole skewed conversation
         // on one task
-        typed.repartition(n, col("conv_id"),
-          pmod(col("turn_idx"), lit(TranscriptGen.SkewSalt)))
+        typed.repartition(spark.sessionState.conf.numShufflePartitions,
+          col("conv_id"), pmod(col("turn_idx"), lit(TranscriptGen.SkewSalt)))
       else typed
     partitioned.mapPartitions { it =>
       val ex = new ExtractorSet // one parser/extractor set per partition
-      it.map(extractTurn(ex, _, renderFormats))
-    }
+      it.map(extractTurn(ex, _))
+    }.toDF()
   }
-
-  def run(spark: SparkSession, turns: DataFrame,
-          repartitionInput: Boolean = true): DataFrame =
-    runTyped(spark, turns, repartitionInput = repartitionInput).toDF()
 }
 
 /** Per-conversation reassembly in stable (conv_id, turn_idx) order —

@@ -17,6 +17,9 @@ final case class Turn(
   * boilerplate ratio, fallback rate" — see BASELINE.md).
   * fallback_stage: 1=xpath(no-op) 2=custom-selector 3=generic-selector
   * 4=heuristic-argmax 5=body-fallback.
+  * parse_ns: wall time of the whole `ExtractorSet.extract` call for
+  * the turn (parse, detection, extraction and rendering), not only
+  * the parse.
   */
 final case class ExtractMetrics(
     nodes_scored: Int,

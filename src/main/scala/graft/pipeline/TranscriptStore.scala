@@ -75,13 +75,22 @@ final class ParquetSnapshotStore(root: String) extends TranscriptStore {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
+    val writes = Seq(
       Future(data.write.mode(SaveMode.Overwrite)
         .parquet(staging.resolve("data").toString)),
       Future(lineage.write.mode(SaveMode.Overwrite)
         .parquet(staging.resolve("_lineage").toString)),
       Future(metrics.write.mode(SaveMode.Overwrite)
-        .parquet(staging.resolve("_metrics").toString)))), Duration.Inf)
+        .parquet(staging.resolve("_metrics").toString)))
+    try Await.result(Future.sequence(writes), Duration.Inf)
+    catch { case e: Throwable =>
+      // Future.sequence fails as soon as one write fails; the others
+      // may still be writing into staging, so let them finish before
+      // deleting it — otherwise every failed attempt leaks a copy
+      writes.foreach(w => Await.ready(w, Duration.Inf))
+      ParquetSnapshotStore.deleteTree(staging)
+      throw e
+    }
     Files.writeString(staging.resolve("_buckets"), doneBuckets.mkString(","))
     // a crash between the publish and the pointer swap leaves an
     // orphaned snapshot=<next>; ids above _current are invisible to

@@ -10,10 +10,10 @@ import graft.pipeline.ExtractJob
   * with a watermark.
   *
   * The per-turn transform is identical to the batch path
-  * (ExtractJob.runTyped without the repartition — streaming
+  * (`ExtractJob.run` without the repartition — streaming
   * micro-batches arrive already partitioned by the source), so batch
-  * and streaming outputs agree row-for-row; the watermark/window agg
-  * demonstrates the stateful side.
+  * and streaming outputs agree row-for-row, renderings included; the
+  * watermark/window agg demonstrates the stateful side.
   */
 object StreamingExtract {
 
@@ -25,7 +25,7 @@ object StreamingExtract {
       .as[graft.pipeline.Turn]
       .mapPartitions { it =>
         val ex = new graft.extract.ExtractorSet
-        it.map(t => (t.ts, ExtractJob.extractTurn(ex, t, renderFormats = false)))
+        it.map(t => (t.ts, ExtractJob.extractTurn(ex, t)))
       }
       .select(col("_1").as("ts"), col("_2.*"))
   }

@@ -1,12 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Round-7 optimization instrumentation (guide §1): per-query
-  * noop-sink isolation timings + `.explain("formatted")` capture for
-  * every registry query, WITHOUT touching the frozen graft.Bench
-  * harness. Mirrors Bench's session config (master local[$CPUS],
-  * shuffle.partitions=$CPUS, AQE on) so numbers are comparable.
+/** Query-registry timer: per-query noop-sink timings plus
+  * `.explain("formatted")` capture for every registry query. The
+  * extraction paths are timed by `perfbench/`; this times the rest of
+  * `graft.SparkEntry`. Session: master local[$CPUS],
+  * shuffle.partitions=$CPUS, AQE on.
   *
   * Usage:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
@@ -14,10 +14,20 @@ import org.apache.spark.sql.SparkSession
   *
   * Writes <planOutDir>/<query>.txt (formatted plan) when planOutDir is
   * not "-", times `reps` repetitions per query (plan construction
-  * inside the timed window, as Bench does), and prints one JSON line:
-  * {"queries": {name: [sec,...]}, "min": {name: sec}}.
+  * inside the timed window) and prints one JSON line:
+  * {"sf": dir, "cpus": n, "queries": {name: [sec,...]}, "min": {name: sec}}.
+  * A failed repetition records -1.
   */
 object BenchExtra {
+
+  /** Seconds to build `build` and run it into the noop sink, which
+    * executes the whole plan without writing output. */
+  def timeBuilt(build: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    build.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -40,8 +50,10 @@ object BenchExtra {
     if (planDir != "-")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(planDir))
 
-    val listener = new graft.Bench.TaskTimeListener
-    spark.sparkContext.addSparkListener(listener)
+    def release(): Unit = {
+      graft.queries.TempCaches.release(spark)
+      spark.catalog.clearCache()
+    }
 
     val byName = graft.SparkEntry.queries
     val results = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
@@ -50,35 +62,25 @@ object BenchExtra {
       // plan capture (pre-execution; shows join strategy + exchanges)
       if (planDir != "-") {
         try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
+          val plan = fn(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(planDir, s"$n.txt"), plan)
         } catch { case e: Throwable =>
           System.err.println(s"[extra] plan capture $n FAILED: $e")
-        } finally {
-          graft.queries.TempCaches.release(spark)
-          spark.catalog.clearCache()
-        }
+        } finally release()
       }
       spark.sparkContext.setJobDescription(s"extra:$n")
-      val secs = (1 to reps).map { r =>
-        val smp =
-          try graft.Bench.timedRep(cpus, r, listener, Some(spark))(
-            graft.Bench.timeBuilt(fn(spark, sfDir)))
+      results(n) = (1 to reps).map { _ =>
+        val sec =
+          try timeBuilt(fn(spark, sfDir))
           catch { case e: Throwable =>
             System.err.println(s"[extra] $n FAILED: $e")
-            graft.Bench.Sample(cpus, r, -1.0, -1.0, 0.0, 0.0, clean = false)
-          } finally {
-            graft.queries.TempCaches.release(spark)
-            spark.catalog.clearCache()
-          }
-        System.err.println(s"[extra] $n rep=${smp.sec} steal%=${smp.stealPct} " +
-          s"task_sec=${smp.taskSec} util=${smp.util}")
-        smp.sec
+            -1.0
+          } finally release()
+        System.err.println(s"[extra] $n rep=$sec")
+        sec
       }
-      results(n) = secs
     }
     val qs = results.map { case (k, v) =>
       "\"" + k + "\":[" + v.mkString(",") + "]"

@@ -48,12 +48,11 @@ object ProbeStages {
 
     val fn = graft.SparkEntry.queries(name)
     for (_ <- 1 to warm) { // warm-up reps (JIT) not recorded
-      graft.Bench.timeBuilt(fn(spark, sfDir))
+      BenchExtra.timeBuilt(fn(spark, sfDir))
       graft.queries.TempCaches.release(spark); spark.catalog.clearCache()
     }
     stages.clear(); taskMs.clear()
-    val t0 = System.nanoTime()
-    val sec = graft.Bench.timeBuilt(fn(spark, sfDir))
+    val sec = BenchExtra.timeBuilt(fn(spark, sfDir))
     graft.queries.TempCaches.release(spark); spark.catalog.clearCache()
     import scala.jdk.CollectionConverters._
     val ss = stages.values.asScala.toSeq.sortBy(_.submitted)

@@ -61,10 +61,11 @@ class MultimodalStreamingSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
 
     val streamed = spark.table("extracted_stream")
-    val batch = ExtractJob.runTyped(spark, turnsDf, renderFormats = false).toDF()
+    val batch = ExtractJob.run(spark, turnsDf)
     assert(streamed.count() == batch.count())
     def fp(df: org.apache.spark.sql.DataFrame): Long =
-      df.agg(expr("bit_xor(xxhash64(conv_id, turn_idx, title, text_content, platform))"))
+      df.agg(expr("bit_xor(xxhash64(conv_id, turn_idx, title, text_content, platform, " +
+        "markdown, text_format))"))
         .head.getLong(0)
     assert(fp(streamed) == fp(batch))
   }

@@ -39,17 +39,22 @@ class PipelineSpec extends AnyFunSuite {
 
   test("extraction output is invariant under partitioning") {
     val turns = TranscriptGen.fromDocuments(docs)
-    def fingerprint(numParts: Int): Long =
-      ExtractJob.runTyped(spark, turns, numPartitions = numParts, renderFormats = false)
-        .toDF()
-        .agg(expr("bit_xor(xxhash64(conv_id, turn_idx, title, text_content, platform))"))
+    // ExtractJob.run repartitions into spark.sql.shuffle.partitions
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    def fingerprint(numParts: Int): Long = {
+      spark.conf.set(key, numParts.toString)
+      val out = ExtractJob.run(spark, turns)
+      assert(out.rdd.getNumPartitions == numParts)
+      out.agg(expr("bit_xor(xxhash64(conv_id, turn_idx, title, text_content, platform))"))
         .head.getLong(0)
-    assert(fingerprint(2) == fingerprint(13))
+    }
+    try assert(fingerprint(2) == fingerprint(13))
+    finally spark.conf.set(key, saved)
   }
 
   test("extraction: no error rows on generated corpus; platforms mixed") {
-    val out = ExtractJob.runTyped(spark, TranscriptGen.fromDocuments(docs),
-      renderFormats = false).toDF().cache()
+    val out = ExtractJob.run(spark, TranscriptGen.fromDocuments(docs)).cache()
     assert(out.filter(col("error").isNotNull).count() == 0)
     val platforms = out.select("platform").distinct().collect().map(_.getString(0)).toSet
     assert(platforms == Set("article", "forum", "weixin"))
@@ -69,7 +74,7 @@ class PipelineSpec extends AnyFunSuite {
       Turn("c1", 2, "user", "<html><body>" + "<div>" * 100000 +
         ("Deeply nested text that is long enough to pass the input length guard. " * 2),
         "", ts)).toDF()
-    val out = ExtractJob.runTyped(spark, turns, renderFormats = false).toDF()
+    val out = ExtractJob.run(spark, turns)
     assert(out.filter(col("error").isNotNull).count() == 2)
     assert(out.filter(col("error").isNull).count() == 1)
   }

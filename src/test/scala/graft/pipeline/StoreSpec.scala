@@ -71,6 +71,29 @@ class StoreSpec extends AnyFunSuite {
     assert(fingerprint(store.readData(spark)) == fingerprint(ExtractJob.run(spark, turns)))
   }
 
+  test("a failed commit removes its staging directory and publishes nothing") {
+    val dir = Files.createTempDirectory("graft-store-failed").toString
+    val store = new ParquetSnapshotStore(dir)
+    val firstHalf = turns.filter(
+      pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
+    val ext = ExtractJob.run(spark, firstHalf)
+    store.commit(ext, CheckpointedExtract.lineageOf(ext),
+      CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
+    val snapshot = store.currentSnapshot()
+    val before = fingerprint(store.readData(spark))
+    // the data write fails at run time, on one row, while the
+    // lineage and metrics writes succeed
+    val bad = ExtractJob.run(spark, turns).withColumn("title",
+      when(col("conv_id") === "conv-000000" && col("turn_idx") === 0,
+        raise_error(lit("injected write failure"))).otherwise(col("title")))
+    intercept[Exception](store.commit(bad, CheckpointedExtract.lineageOf(ext),
+      CheckpointedExtract.metricsOf(ext), Seq(4, 5, 6, 7)))
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_tmp_")))
+    assert(store.currentSnapshot() == snapshot)
+    assert(store.committedBuckets() == Set(0, 1, 2, 3))
+    assert(fingerprint(store.readData(spark)) == before)
+  }
+
   test("empty input still commits every todo bucket (resume/empty-corpus)") {
     // the one-pass rewrite stages the extracted slice with partitionBy;
     // a zero-row slice writes no data files, so the read-back must use
