@@ -7,20 +7,21 @@ import graft.extract.ExtractorSet
 /** The core Spark job: transcript table → per-turn extraction
   * (SURVEY.md §2.10, the north rule's engine).
   *
-  * Shape: scan → salted repartition by conv_id → mapPartitions with
-  * one ExtractorSet per partition (partition-scoped analogue of the
-  * reference's process-wide extractor cache, ExtractorFactory.ts:9 —
-  * fresh state per partition kills the cross-document state bugs by
-  * construction) → typed output rows.
+  * Shape: scan → mapPartitions with one ExtractorSet per partition
+  * (partition-scoped analogue of the reference's process-wide
+  * extractor cache, ExtractorFactory.ts:9 — fresh state per partition
+  * kills the cross-document state bugs by construction) → typed
+  * output rows.
   *
   * Scale notes:
-  *  - extraction is per-turn pure, so the salt (turn_idx mod S) can
-  *    break up pathological conversations without changing results —
-  *    output order is only imposed downstream where an invariant
-  *    requires it (Reassembly);
-  *  - the repartition is the job's ONLY shuffle; everything else is
-  *    narrow. At 10^12 turns the input Iceberg table is already
-  *    bucket(conv_id)-partitioned, and AQE coalesces the tail;
+  *  - extraction is per-turn pure, so the job is narrow: no exchange,
+  *    and the input's splits set the parallelism and the output
+  *    partitioning. Results do not depend on either; output order is
+  *    only imposed downstream where an invariant requires it
+  *    (Reassembly);
+  *  - an input too coarsely split for the cluster is rebalanced by
+  *    its producer, before any work that inflates the rows (the
+  *    registry queries do this ahead of HTML synthesis);
   *  - the per-turn work is opaque string→struct (Catalyst can't see
   *    into HTML), so `mapPartitions` on a typed Dataset is the
   *    optimal plan — one codegen boundary, no per-row UDF setup
@@ -53,35 +54,18 @@ object ExtractJob {
     }
   }
 
-  /** Extract every turn of `turns` into [[ExtractedTurn]] rows.
-    *
-    * @param repartitionInput salted hash repartition by
-    *   (conv_id, turn_idx % salt) into `spark.sql.shuffle.partitions`
-    *   partitions — required for unbucketed input with skewed
-    *   conversations. Pass false when the input is already
-    *   well-partitioned (production: an Iceberg table bucketed by
-    *   conv_id — the whole point of that layout is that this shuffle
-    *   is elided; extraction is per-turn pure, so results are
-    *   identical either way).
-    */
-  def run(spark: SparkSession, turns: DataFrame,
-          repartitionInput: Boolean = true): DataFrame = {
+  /** Extract every turn of `turns` into [[ExtractedTurn]] rows, one
+    * output partition per input partition. */
+  def run(spark: SparkSession, turns: DataFrame): DataFrame = {
     import spark.implicits._
-    val typed = turns
+    turns
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         col("tool"), col("ts"))
       .as[Turn]
-    val partitioned =
-      if (repartitionInput)
-        // salted: conv_id alone would put a whole skewed conversation
-        // on one task
-        typed.repartition(spark.sessionState.conf.numShufflePartitions,
-          col("conv_id"), pmod(col("turn_idx"), lit(TranscriptGen.SkewSalt)))
-      else typed
-    partitioned.mapPartitions { it =>
-      val ex = new ExtractorSet // one parser/extractor set per partition
-      it.map(extractTurn(ex, _))
-    }.toDF()
+      .mapPartitions { it =>
+        val ex = new ExtractorSet // one parser/extractor set per partition
+        it.map(extractTurn(ex, _))
+      }.toDF()
   }
 }
 

@@ -11,21 +11,16 @@ object ExtractQueries {
 
   /** Flagship: synthesize the transcript table from `documents`,
     * run the full per-turn extraction, return stable-ordered rows. */
-  // Round-7 shape for the extract-based queries: the documents scan is
-  // rebalanced to full parallelism FIRST (Tables.parallelize — a no-op
-  // when the source is properly split), so the HTML synthesis runs
-  // parallel, and ExtractJob's own salted repartition is then elided
-  // (repartitionInput = false): ONE shuffle total, carrying the RAW
-  // document text (~4-6x smaller than the synthesized HTML the old
-  // post-generation shuffle moved — guide §2.3 "shuffle fewer bytes").
-  // Round-robin rebalance spreads the skewed conversation's turns
-  // evenly, which is exactly what the salt achieved; extraction is
-  // per-turn pure, so results are identical.
+  // The documents scan is a single split; rebalancing it to full
+  // parallelism FIRST (Tables.parallelize — a no-op when the source
+  // is properly split) lets the HTML synthesis and the narrow
+  // extraction after it run in parallel, and the one shuffle carries
+  // the raw document text, not the ~4-6x larger synthesized HTML.
   private def parTurns(s: org.apache.spark.sql.SparkSession, d: String) =
     TranscriptGen.fromDocuments(Tables.parallelize(Tables.documents(s, d)))
 
   val qExtract = Q.noOracle("q20_extract_turns") { (s, d) =>
-    ExtractJob.run(s, parTurns(s, d), repartitionInput = false)
+    ExtractJob.run(s, parTurns(s, d))
       .select(col("conv_id"), col("turn_idx"), col("platform"), col("title"),
         col("text_content"), col("metrics.fallback_stage").as("fallback_stage"))
       .orderBy(col("conv_id"), col("turn_idx"))
@@ -33,7 +28,7 @@ object ExtractQueries {
 
   /** Per-platform extraction metrics rollup (north rule metrics). */
   val qMetrics = Q.noOracle("q21_extract_metrics") { (s, d) =>
-    ExtractJob.run(s, parTurns(s, d), repartitionInput = false)
+    ExtractJob.run(s, parTurns(s, d))
       .groupBy(col("platform"))
       .agg(
         count(lit(1)).as("n_turns"),
@@ -49,7 +44,7 @@ object ExtractQueries {
     * table scale; SURVEY.md §2.8/§2.10). */
   val qReassemble = Q.noOracle("q22_extract_reassembly") { (s, d) =>
     Reassembly.conversations(
-        ExtractJob.run(s, parTurns(s, d), repartitionInput = false))
+        ExtractJob.run(s, parTurns(s, d)))
       .orderBy(col("conv_id"))
   }
 
@@ -85,7 +80,7 @@ object ExtractQueries {
     // cache retention — same plan downstream, durable intermediate
     // (round-5 VERDICT #3).
     val ex = graft.queries.TempCaches.cached(
-      ExtractJob.run(s, turns, repartitionInput = false).select(
+      ExtractJob.run(s, turns).select(
         xxhash64(col("conv_id"), col("turn_idx")).as("doc_id"),
         col("platform"), col("text_content").as("text")))
     graft.queries.TextPipeline.corpusClean(ex, "platform")

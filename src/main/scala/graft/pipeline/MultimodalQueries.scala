@@ -108,8 +108,7 @@ object MultimodalQueries {
     val store = new ParquetSnapshotStore(dir)
     val turns = TranscriptGen.fromDocuments(
       Tables.parallelize(Tables.documents(s, d)))
-    CheckpointedExtract.run(s, turns, store, buckets = 8, bucketsPerCommit = 4,
-      repartitionInput = false)
+    CheckpointedExtract.run(s, turns, store, buckets = 8, bucketsPerCommit = 4)
     store.readData(s)
       .select(col("conv_id"), col("turn_idx"), col("platform"),
         col("text_content"))

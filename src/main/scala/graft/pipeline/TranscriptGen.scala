@@ -25,10 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object TranscriptGen {
 
-  /** Multiplier used by `repartition(n, conv_id, salt)`; extraction
-    * is per-turn pure so salting never changes results. */
-  val SkewSalt = 16
-
   private def escapeHtml(c: Column): Column = {
     // only & and < matter for our ASCII corpus; keep cheap + codegen'd
     regexp_replace(regexp_replace(c, "&", "&amp;"), "<", "&lt;")

@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Snapshot-committed table storage (north rule: "resumable from
   * Iceberg snapshot checkpoints with per-partition lineage rows and
@@ -130,19 +131,29 @@ object ParquetSnapshotStore {
   * function of the turn.
   */
 object CheckpointedExtract {
+  val DefaultBuckets = 8
 
-  def lineageOf(extracted: DataFrame): DataFrame =
-    extracted.groupBy(spark_partition_id().as("partition_id")).agg(
+  /** The bucket of a row: hash(conv_id) mod `buckets`. Slices the
+    * input for resume and keys the `_lineage` rows. */
+  private def bucketOf(buckets: Int): Column = pmod(xxhash64(col("conv_id")), lit(buckets))
+
+  /** One row per bucket: a function of the rows alone, whatever the
+    * partitioning of `extracted`. */
+  def lineageOf(extracted: DataFrame, buckets: Int = DefaultBuckets): DataFrame =
+    extracted.groupBy(bucketOf(buckets).as("bucket")).agg(
       count(lit(1)).as("n_rows"),
       countDistinct(col("conv_id")).as("n_convs"),
       sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("n_errors"),
       expr("bit_xor(xxhash64(conv_id, turn_idx, text_content))").as("content_hash"))
 
+  /** One row per platform. The ratio is summed in DECIMAL, then
+    * divided: a double sum would depend on the row order. */
   def metricsOf(extracted: DataFrame): DataFrame =
     extracted.groupBy(col("platform")).agg(
       count(lit(1)).as("n_turns"),
       sum(col("metrics.nodes_scored").cast("long")).as("nodes_scored"),
-      avg(col("metrics.boilerplate_ratio")).as("avg_boilerplate_ratio"),
+      (sum(col("metrics.boilerplate_ratio").cast(DecimalType(38, 18))) / count(lit(1)))
+        .cast("double").as("avg_boilerplate_ratio"),
       avg(when(col("metrics.fallback_stage") === 5, 1.0).otherwise(0.0))
         .as("body_fallback_rate"),
       sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("n_errors"))
@@ -159,22 +170,16 @@ object CheckpointedExtract {
     * Iceberg analogue stages to an uncommitted WAP branch and commits
     * per bucket group from it).
     */
-  /** @param repartitionInput forwarded to [[ExtractJob.run]] — pass
-    *   false when `turns` is already well-partitioned (e.g. built
-    *   from a Tables.parallelize'd scan), eliding the salted shuffle
-    *   of the synthesized HTML bodies. */
   def run(spark: SparkSession, turns: DataFrame, store: TranscriptStore,
-          buckets: Int = 8, bucketsPerCommit: Int = 4,
-          repartitionInput: Boolean = true): Seq[Long] = {
+          buckets: Int = DefaultBuckets, bucketsPerCommit: Int = 4): Seq[Long] = {
     val done = store.committedBuckets()
     val todo = (0 until buckets).filterNot(done.contains)
     if (todo.isEmpty) return Seq.empty
     val staging = Files.createTempDirectory("graft-extract-staging")
     try {
-      val bucketCol = pmod(xxhash64(col("conv_id")), lit(buckets))
+      val bucketCol = bucketOf(buckets)
       val slice = turns.filter(bucketCol.isin(todo.map(_.toLong): _*))
-      val extracted = ExtractJob.run(spark, slice, repartitionInput = repartitionInput)
-        .withColumn("bucket", bucketCol)
+      val extracted = ExtractJob.run(spark, slice).withColumn("bucket", bucketCol)
       extracted.write.mode(SaveMode.Overwrite)
         .partitionBy("bucket").parquet(staging.toString)
       // explicit schema: a zero-row slice stages no data files, and
@@ -186,7 +191,7 @@ object CheckpointedExtract {
         val data = staged
           .filter(col("bucket").isin(group: _*)) // partition-pruned
           .drop("bucket")
-        store.commit(data, lineageOf(data), metricsOf(data), group)
+        store.commit(data, lineageOf(data, buckets), metricsOf(data), group)
       }.toSeq
     } finally {
       try ParquetSnapshotStore.deleteTree(staging)

@@ -9,11 +9,11 @@ import graft.pipeline.ExtractJob
   * micro-batches → per-turn extraction → windowed quality metrics
   * with a watermark.
   *
-  * The per-turn transform is identical to the batch path
-  * (`ExtractJob.run` without the repartition — streaming
-  * micro-batches arrive already partitioned by the source), so batch
-  * and streaming outputs agree row-for-row, renderings included; the
-  * watermark/window agg demonstrates the stateful side.
+  * The per-turn transform is the batch path's plan (`ExtractJob.run`:
+  * mapPartitions over the source's partitions), keeping `ts` for the
+  * window, so batch and streaming outputs agree row-for-row,
+  * renderings included; the watermark/window agg demonstrates the
+  * stateful side.
   */
 object StreamingExtract {
 

@@ -39,18 +39,14 @@ class PipelineSpec extends AnyFunSuite {
 
   test("extraction output is invariant under partitioning") {
     val turns = TranscriptGen.fromDocuments(docs)
-    // ExtractJob.run repartitions into spark.sql.shuffle.partitions
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
+    // ExtractJob.run keeps the input's partitioning
     def fingerprint(numParts: Int): Long = {
-      spark.conf.set(key, numParts.toString)
-      val out = ExtractJob.run(spark, turns)
+      val out = ExtractJob.run(spark, turns.repartition(numParts))
       assert(out.rdd.getNumPartitions == numParts)
       out.agg(expr("bit_xor(xxhash64(conv_id, turn_idx, title, text_content, platform))"))
         .head.getLong(0)
     }
-    try assert(fingerprint(2) == fingerprint(13))
-    finally spark.conf.set(key, saved)
+    assert(fingerprint(2) == fingerprint(13))
   }
 
   test("extraction: no error rows on generated corpus; platforms mixed") {

@@ -120,6 +120,28 @@ class StoreSpec extends AnyFunSuite {
     assert(metrics.agg(sum("n_turns")).head.getLong(0) == turns.count())
   }
 
+  test("lineage and metrics depend on the rows, not on the partitioning") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    def commitAt(parts: Int): String = {
+      spark.conf.set(key, parts.toString)
+      val dir = Files.createTempDirectory(s"graft-store-parts$parts").toString
+      CheckpointedExtract.run(spark, turns.repartition(parts),
+        new ParquetSnapshotStore(dir), buckets = 8, bucketsPerCommit = 4)
+      dir
+    }
+    def rows(path: String): Seq[String] =
+      spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+    try {
+      val (a, b) = (commitAt(2), commitAt(7))
+      assert(fingerprint(new ParquetSnapshotStore(a).readData(spark)) ==
+        fingerprint(new ParquetSnapshotStore(b).readData(spark)))
+      for (snap <- Seq(0, 1); table <- Seq("_lineage", "_metrics"))
+        assert(rows(s"$a/snapshot=$snap/$table") == rows(s"$b/snapshot=$snap/$table"),
+          s"snapshot=$snap/$table")
+    } finally spark.conf.set(key, saved)
+  }
+
   test("one-pass: input is extracted once, not once per commit group") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-store-onepass").toString

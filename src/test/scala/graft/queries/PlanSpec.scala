@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape checks: the properties that matter at 100 TB
   * must be visible in explain() output, not assumed — filter/column
-  * pushdown into the parquet scan, broadcast of small dims, a single
-  * shuffle for the extraction job.
+  * pushdown into the parquet scan, broadcast of small dims, no
+  * shuffle in the extraction job.
   */
 class PlanSpec extends AnyFunSuite {
 
@@ -47,12 +47,12 @@ class PlanSpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(p).size >= 2) // partial + final
   }
 
-  test("extraction job: exactly one shuffle (the salted repartition)") {
+  test("extraction job adds no shuffle") {
     val turns = graft.pipeline.TranscriptGen.fromDocuments(
       Tables.documents(spark, sf))
     val p = graft.pipeline.ExtractJob.run(spark, turns)
       .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllIn(p).size == 1, p.take(2000))
+    assert("Exchange".r.findAllIn(p).isEmpty, p.take(2000))
   }
 
   test("q15: ANN candidate join is bucketed — hash/merge join on (band,sig), no nested loop") {
