@@ -1,11 +1,14 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.queries.{Q, Tables}
 
 /** Extraction-core queries (non-SQL-expressible — rows-only driver
   * check; semantics are pinned by the golden-fixture ScalaTest suite
-  * instead, see SURVEY.md §5.2).
+  * instead, see SURVEY.md §5.2, and each output by OracleSpec's
+  * sf0.001 fingerprint).
   */
 object ExtractQueries {
 
@@ -28,16 +31,25 @@ object ExtractQueries {
 
   /** Per-platform extraction metrics rollup (north rule metrics). */
   val qMetrics = Q.noOracle("q21_extract_metrics") { (s, d) =>
-    ExtractJob.run(s, parTurns(s, d))
-      .groupBy(col("platform"))
+    platformMetrics(ExtractJob.run(s, parTurns(s, d)))
+  }
+
+  /** q21's rollup over extracted rows. The averages are exact sums
+    * (DECIMAL for the ratio, LONG for the count) divided once, so they
+    * depend on the rows only: a double `avg` adds its terms in
+    * partition order and moves in the last digits when the
+    * partitioning changes (as `CheckpointedExtract.metricsOf`). */
+  def platformMetrics(extracted: DataFrame): DataFrame =
+    extracted.groupBy(col("platform"))
       .agg(
         count(lit(1)).as("n_turns"),
-        avg(col("metrics.boilerplate_ratio")).as("avg_boilerplate_ratio"),
-        avg(col("metrics.nodes_scored").cast("double")).as("avg_nodes_scored"),
+        (sum(col("metrics.boilerplate_ratio").cast(DecimalType(38, 18))) / count(lit(1)))
+          .cast("double").as("avg_boilerplate_ratio"),
+        (sum(col("metrics.nodes_scored").cast("long")) / count(lit(1)))
+          .as("avg_nodes_scored"),
         avg(when(col("metrics.fallback_stage") === 5, 1.0).otherwise(0.0))
           .as("body_fallback_rate"))
       .orderBy(col("platform"))
-  }
 
   /** Per-conversation reassembly of extracted turns in stable
     * (conv_id, turn_idx) order (ForumExtractor.reorganizeContent at
@@ -55,9 +67,9 @@ object ExtractQueries {
     * over the EXTRACTED text, not the raw documents. No SQL oracle is
     * possible across the extraction boundary (DuckDB cannot replay
     * the extractor), so the driver check is rows-only and the
-    * semantics are pinned by a frozen sf0.001 fixture
-    * (graft.tools.FreezeQ38 / ExtractCleanSpec) plus the q36 oracle
-    * on the shared cleaning stages.
+    * semantics are pinned by OracleSpec's sf0.001 fingerprint (row
+    * count and every column, in order) plus the q36 oracle on the
+    * shared cleaning stages.
     *
     * doc_id = xxhash64(conv_id, turn_idx): deterministic and stable
     * under any partitioning, so the min-doc_id dedup canonicalization

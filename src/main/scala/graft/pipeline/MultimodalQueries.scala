@@ -12,12 +12,11 @@ object MultimodalQueries {
     * genuine RIFF/WAVE PCM parsed by WavCodec; video payloads are
     * genuine RIFF/AVI uncompressed-DIB streams parsed by AviCodec.
     * StubCodec survives only as the undecodable-payload fallback
-    * (e.g. compressed formats). Rows-only for the driver, but feature
-    * norms are pinned
-    * against a frozen golden fixture in MultimodalCodecSpec (round-3
-    * VERDICT #6) so decode regressions fail a test. Output is
-    * per-asset and deterministic (PNG and PCM are lossless, so
-    * decoded pixels/samples — and therefore features — are exact). */
+    * (e.g. compressed formats). Rows-only for the driver, but every
+    * column is pinned by OracleSpec's sf0.001 fingerprint so decode
+    * regressions fail a test. Output is per-asset and deterministic
+    * (PNG and PCM are lossless, so decoded pixels/samples — and
+    * therefore features — are exact). */
   val q30 = Q.noOracle("q30_multimodal_features") { (s, d) =>
     val assets = Multimodal.syntheticAssetsDecodable(s, Tables.documents(s, d))
     Multimodal.extractFeatures(s, assets)
@@ -104,7 +103,10 @@ object MultimodalQueries {
     * then read back from the snapshot chain. Result must equal the
     * direct extraction (asserted in StoreSpec; rows-only here). */
   val q33 = Q.noOracle("q33_checkpoint_roundtrip") { (s, d) =>
-    val dir = java.nio.file.Files.createTempDirectory("graft-store-q33").toString
+    // under the SparkContext's files root, which spark.stop() deletes:
+    // the store must outlive this call (the result reads it lazily)
+    val dir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(
+      org.apache.spark.SparkFiles.getRootDirectory()), "graft-store-q33").toString
     val store = new ParquetSnapshotStore(dir)
     val turns = TranscriptGen.fromDocuments(
       Tables.parallelize(Tables.documents(s, d)))

@@ -79,11 +79,18 @@ object TempCaches {
     * plans reference a LogicalRDD leaf instead of the full subtree.
     * For the deep self-join pipelines (q41's probe machinery) the
     * un-truncated logical tree made every AQE stage-boundary
-    * RE-OPTIMIZATION walk the whole 6,000-node plan — measured on
-    * q41: 12.8 s / 55 stages with AQE re-planning the full tree vs
-    * 6.9 s / 29 stages without AQE; pinning the 3-4 shared frames
-    * keeps AQE (the driver session has it on, and it earns its keep
-    * on skewed shuffles) while making each re-optimization cheap.
+    * RE-OPTIMIZATION walk the whole 6,000-node plan; pinning the 3-4
+    * shared frames keeps AQE (the driver session has it on, and it
+    * earns its keep on skewed shuffles) while making each
+    * re-optimization cheap. Measured against a copy with `pinned` and
+    * `cached` both the identity (4-core VM, sf0.001, 4 alternating
+    * pairs of 4 repetitions, first dropped, medians): q41 2.54 s
+    * pinned vs 24.9 s unpinned, q38 1.13 vs 2.78 s, q12 1.34 vs
+    * 3.07 s; every pinned query ran slower unpinned (at sf0.1 for
+    * q07/q37/q43/q45), with all 40 outputs row-identical. Reproduce
+    * at each version with
+    *   SPARK_GRAFT_SF_DIR=<testdata>/sf0.001 SPARK_GRAFT_CPUS=4 \
+    *     sbt -batch "runMain graft.tools.BenchExtra - 4 q41_ingest_dedup"
     * Results are identical — the same rows, materialized once (it
     * also removes the duplicate cache-build races the sidecar logged
     * as "Block already exists"). At production scale the equivalent

@@ -211,10 +211,10 @@ object Similarity {
     * Scale: bits grows with log2(n) ⇒ expected bucket size is
     * constant (~128), so candidate pairs are O(n · 128 · bands) and
     * the per-band join shuffles (band, sig) longs, never embeddings.
-    * Measured recall@3 vs exact q10 (bits=4, 24 bands; see
-    * graft.tools.ProbeRecall): 0.975 at sf0.01 (n=500), 0.971 at
-    * sf0.001 — on a corpus whose true top-3 are WEAK neighbors
-    * (median cosine 0.33), the hard case for sign-LSH.
+    * Measured recall@3 vs exact q10 (bits=4, 24 bands): 0.971 at
+    * sf0.001 (IvfSpec bounds it at >= 0.95), 0.975 at sf0.01 (n=500)
+    * — on a corpus whose true top-3 are WEAK neighbors (median cosine
+    * 0.33), the hard case for sign-LSH.
     */
   /** Spark side of [[annCtes]]: the per-band bucket table
     * (vec_id, band, sig) — longs only, embeddings are NOT carried
@@ -336,10 +336,11 @@ object Similarity {
   // how FAISS ships its coarse quantizer and how MLlib's KMeans
   // broadcasts centers; MLlib does the same per-iteration centroid
   // collect.
-  // Measured (graft.tools.ProbeRecall): recall@3 = 1.0 at n=500
-  // (K=4 ≤ probe ⇒ exhaustive — q37 equals exact q10 row-for-row,
-  // IvfSpec) and 0.576 at n=2000 (15 cells, probe 4 ≈ 27% scanned)
-  // vs 0.978 for the q15 sign-LSH on the same input. Honest reading:
+  // Measured recall@3 vs exact q10: 1.0 at n=500 (K=4 ≤ probe ⇒
+  // exhaustive — IvfSpec pins q37 equal to exact q10 row-for-row) and,
+  // in a one-off run at n=2000, 0.576 (15 cells, probe 4 ≈ 27%
+  // scanned) vs 0.978 for the q15 sign-LSH on the same input (IvfSpec
+  // bounds q15's recall at n=500). Honest reading:
   // THIS corpus's true neighbors are weak (median cosine 0.33 —
   // near-uniform directions), the adversarial case for coarse-cell
   // pruning, so the multi-band LSH OR-construction remains the

@@ -10,6 +10,10 @@ import graft.extract._
   */
 object FreezeFixtures {
 
+  /** JSON string literal: escapes backslash, quote and ALL control
+    * chars (< 0x20) — also `graft.Verify`'s oracle_sql.json, where a
+    * tab or CR in the SQL would otherwise make the driver's json.load
+    * fail. */
   def esc(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

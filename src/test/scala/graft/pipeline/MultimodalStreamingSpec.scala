@@ -97,32 +97,34 @@ class MultimodalStreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // day 1: extract + commit a corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-ingest").toString
-    val store = new ParquetSnapshotStore(dir)
-    CheckpointedExtract.run(spark, TranscriptGen.fromDocuments(docs.limit(30)),
-      store, buckets = 2, bucketsPerCommit = 2)
-    val storeHashes = graft.streaming.StreamingExtract.storeHashIndex(store, spark)
-    // day 2 stream: re-crawled committed content + fresh docs (one duplicated in-stream)
-    val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    val recrawl = store.readData(spark).select(col("text_content")).limit(10)
-      .collect().zipWithIndex.map { case (r, i) =>
-        (new java.sql.Timestamp(t0.getTime + i * 1000L), r.getString(0), 1000L + i) }
-    val fresh = Seq(
-      (new java.sql.Timestamp(t0.getTime + 60000L), "fresh streaming document one", 1L),
-      (new java.sql.Timestamp(t0.getTime + 61000L), "fresh streaming document two", 2L),
-      (new java.sql.Timestamp(t0.getTime + 62000L), "fresh streaming document one", 3L))
-    val stream = MemoryStream[(java.sql.Timestamp, String, Long)]
-    stream.addData(recrawl.toSeq ++ fresh)
-    val q = graft.streaming.StreamingExtract
-      .ingestStream(stream.toDF().toDF("ts", "text", "doc_id"), storeHashes)
-      .writeStream.format("memory").queryName("ingest_stream")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table("ingest_stream")
-    // every re-crawled row dropped by the static hash index; the two
-    // distinct fresh texts admitted once each (in-stream dup dropped)
-    assert(out.count() == 2)
-    assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    val root = java.nio.file.Files.createTempDirectory("graft-stream-ingest")
+    try {
+      val store = new ParquetSnapshotStore(root.toString)
+      CheckpointedExtract.run(spark, TranscriptGen.fromDocuments(docs.limit(30)),
+        store, buckets = 2, bucketsPerCommit = 2)
+      val storeHashes = graft.streaming.StreamingExtract.storeHashIndex(store, spark)
+      // day 2 stream: re-crawled committed content + fresh docs (one duplicated in-stream)
+      val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+      val recrawl = store.readData(spark).select(col("text_content")).limit(10)
+        .collect().zipWithIndex.map { case (r, i) =>
+          (new java.sql.Timestamp(t0.getTime + i * 1000L), r.getString(0), 1000L + i) }
+      val fresh = Seq(
+        (new java.sql.Timestamp(t0.getTime + 60000L), "fresh streaming document one", 1L),
+        (new java.sql.Timestamp(t0.getTime + 61000L), "fresh streaming document two", 2L),
+        (new java.sql.Timestamp(t0.getTime + 62000L), "fresh streaming document one", 3L))
+      val stream = MemoryStream[(java.sql.Timestamp, String, Long)]
+      stream.addData(recrawl.toSeq ++ fresh)
+      val q = graft.streaming.StreamingExtract
+        .ingestStream(stream.toDF().toDF("ts", "text", "doc_id"), storeHashes)
+        .writeStream.format("memory").queryName("ingest_stream")
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      val out = spark.table("ingest_stream")
+      // every re-crawled row dropped by the static hash index; the two
+      // distinct fresh texts admitted once each (in-stream dup dropped)
+      assert(out.count() == 2)
+      assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    } finally ParquetSnapshotStore.deleteTree(root)
   }
 
   test("streaming windowed metrics produce rows under watermark") {

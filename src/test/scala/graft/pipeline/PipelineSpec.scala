@@ -49,6 +49,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(fingerprint(2) == fingerprint(13))
   }
 
+  test("q21 metrics rollup is invariant under partitioning") {
+    val turns = TranscriptGen.fromDocuments(docs)
+    def rollup(numParts: Int): Seq[org.apache.spark.sql.Row] =
+      ExtractQueries.platformMetrics(ExtractJob.run(spark, turns.repartition(numParts)))
+        .collect().toSeq
+    assert(rollup(2) == rollup(7))
+  }
+
   test("extraction: no error rows on generated corpus; platforms mixed") {
     val out = ExtractJob.run(spark, TranscriptGen.fromDocuments(docs)).cache()
     assert(out.filter(col("error").isNotNull).count() == 0)

@@ -21,152 +21,176 @@ class StoreSpec extends AnyFunSuite {
   private def fingerprint(df: org.apache.spark.sql.DataFrame): Long =
     df.agg(expr("bit_xor(xxhash64(conv_id, turn_idx, text_content))")).head.getLong(0)
 
+  /** Runs `body` on a fresh store root and deletes the root after it. */
+  private def withRoot[T](prefix: String)(body: String => T): T = {
+    val root = Files.createTempDirectory(prefix)
+    try body(root.toString) finally ParquetSnapshotStore.deleteTree(root)
+  }
+
   test("commit/read round trip equals direct extraction") {
-    val dir = Files.createTempDirectory("graft-store").toString
-    val store = new ParquetSnapshotStore(dir)
-    val snaps = CheckpointedExtract.run(spark, turns, store, buckets = 8, bucketsPerCommit = 4)
-    assert(snaps == Seq(0L, 1L))
-    assert(store.committedBuckets() == (0 until 8).toSet)
-    val direct = ExtractJob.run(spark, turns)
-    assert(store.readData(spark).count() == direct.count())
-    assert(fingerprint(store.readData(spark)) == fingerprint(direct))
+    withRoot("graft-store") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      val snaps = CheckpointedExtract.run(spark, turns, store, buckets = 8, bucketsPerCommit = 4)
+      assert(snaps == Seq(0L, 1L))
+      assert(store.committedBuckets() == (0 until 8).toSet)
+      val direct = ExtractJob.run(spark, turns)
+      assert(store.readData(spark).count() == direct.count())
+      assert(fingerprint(store.readData(spark)) == fingerprint(direct))
+    }
   }
 
   test("resume: interrupted run completes from last snapshot, identical output") {
-    val dir = Files.createTempDirectory("graft-store-resume").toString
-    val store = new ParquetSnapshotStore(dir)
-    // simulate a crash after the first commit: only buckets 0-3
-    val firstHalf = turns.filter(
-      pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
-    val ext = ExtractJob.run(spark, firstHalf)
-    store.commit(ext, CheckpointedExtract.lineageOf(ext),
-      CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
-    assert(store.committedBuckets() == Set(0, 1, 2, 3))
-    // resumed run processes ONLY the remaining buckets
-    val snaps = CheckpointedExtract.run(spark, turns, store, buckets = 8, bucketsPerCommit = 4)
-    assert(snaps == Seq(1L))
-    assert(fingerprint(store.readData(spark)) == fingerprint(ExtractJob.run(spark, turns)))
-    // idempotent: a third run commits nothing
-    assert(CheckpointedExtract.run(spark, turns, store, buckets = 8).isEmpty)
+    withRoot("graft-store-resume") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      // simulate a crash after the first commit: only buckets 0-3
+      val firstHalf = turns.filter(
+        pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
+      val ext = ExtractJob.run(spark, firstHalf)
+      store.commit(ext, CheckpointedExtract.lineageOf(ext),
+        CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
+      assert(store.committedBuckets() == Set(0, 1, 2, 3))
+      // resumed run processes ONLY the remaining buckets
+      val snaps = CheckpointedExtract.run(spark, turns, store, buckets = 8, bucketsPerCommit = 4)
+      assert(snaps == Seq(1L))
+      assert(fingerprint(store.readData(spark)) == fingerprint(ExtractJob.run(spark, turns)))
+      // idempotent: a third run commits nothing
+      assert(CheckpointedExtract.run(spark, turns, store, buckets = 8).isEmpty)
+    }
   }
 
   test("resume: an orphaned unpublished snapshot does not block the next commit") {
-    val dir = Files.createTempDirectory("graft-store-orphan").toString
-    val store = new ParquetSnapshotStore(dir)
-    val firstHalf = turns.filter(
-      pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
-    val ext = ExtractJob.run(spark, firstHalf)
-    store.commit(ext, CheckpointedExtract.lineageOf(ext),
-      CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
-    // a crash between the publish rename and the pointer swap leaves
-    // snapshot=<current+1> on disk, unreferenced by _current
-    val orphan = java.nio.file.Paths.get(dir,
-      s"snapshot=${store.currentSnapshot().get + 1}", "data")
-    Files.createDirectories(orphan)
-    Files.writeString(orphan.resolve("junk"), "partial")
-    assert(store.committedBuckets() == Set(0, 1, 2, 3))
-    val snaps = CheckpointedExtract.run(spark, turns, store, buckets = 8, bucketsPerCommit = 4)
-    assert(snaps == Seq(1L))
-    assert(store.committedBuckets() == (0 until 8).toSet)
-    assert(fingerprint(store.readData(spark)) == fingerprint(ExtractJob.run(spark, turns)))
+    withRoot("graft-store-orphan") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      val firstHalf = turns.filter(
+        pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
+      val ext = ExtractJob.run(spark, firstHalf)
+      store.commit(ext, CheckpointedExtract.lineageOf(ext),
+        CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
+      // a crash between the publish rename and the pointer swap leaves
+      // snapshot=<current+1> on disk, unreferenced by _current
+      val orphan = java.nio.file.Paths.get(dir,
+        s"snapshot=${store.currentSnapshot().get + 1}", "data")
+      Files.createDirectories(orphan)
+      Files.writeString(orphan.resolve("junk"), "partial")
+      assert(store.committedBuckets() == Set(0, 1, 2, 3))
+      val snaps = CheckpointedExtract.run(spark, turns, store, buckets = 8, bucketsPerCommit = 4)
+      assert(snaps == Seq(1L))
+      assert(store.committedBuckets() == (0 until 8).toSet)
+      assert(fingerprint(store.readData(spark)) == fingerprint(ExtractJob.run(spark, turns)))
+    }
   }
 
   test("a failed commit removes its staging directory and publishes nothing") {
-    val dir = Files.createTempDirectory("graft-store-failed").toString
-    val store = new ParquetSnapshotStore(dir)
-    val firstHalf = turns.filter(
-      pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
-    val ext = ExtractJob.run(spark, firstHalf)
-    store.commit(ext, CheckpointedExtract.lineageOf(ext),
-      CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
-    val snapshot = store.currentSnapshot()
-    val before = fingerprint(store.readData(spark))
-    // the data write fails at run time, on one row, while the
-    // lineage and metrics writes succeed
-    val bad = ExtractJob.run(spark, turns).withColumn("title",
-      when(col("conv_id") === "conv-000000" && col("turn_idx") === 0,
-        raise_error(lit("injected write failure"))).otherwise(col("title")))
-    intercept[Exception](store.commit(bad, CheckpointedExtract.lineageOf(ext),
-      CheckpointedExtract.metricsOf(ext), Seq(4, 5, 6, 7)))
-    assert(!new java.io.File(dir).list().exists(_.startsWith("_tmp_")))
-    assert(store.currentSnapshot() == snapshot)
-    assert(store.committedBuckets() == Set(0, 1, 2, 3))
-    assert(fingerprint(store.readData(spark)) == before)
+    withRoot("graft-store-failed") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      val firstHalf = turns.filter(
+        pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
+      val ext = ExtractJob.run(spark, firstHalf)
+      store.commit(ext, CheckpointedExtract.lineageOf(ext),
+        CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
+      val snapshot = store.currentSnapshot()
+      val before = fingerprint(store.readData(spark))
+      // the data write fails at run time, on one row, while the
+      // lineage and metrics writes succeed
+      val bad = ExtractJob.run(spark, turns).withColumn("title",
+        when(col("conv_id") === "conv-000000" && col("turn_idx") === 0,
+          raise_error(lit("injected write failure"))).otherwise(col("title")))
+      intercept[Exception](store.commit(bad, CheckpointedExtract.lineageOf(ext),
+        CheckpointedExtract.metricsOf(ext), Seq(4, 5, 6, 7)))
+      assert(!new java.io.File(dir).list().exists(_.startsWith("_tmp_")))
+      assert(store.currentSnapshot() == snapshot)
+      assert(store.committedBuckets() == Set(0, 1, 2, 3))
+      assert(fingerprint(store.readData(spark)) == before)
+    }
   }
 
   test("empty input still commits every todo bucket (resume/empty-corpus)") {
     // the one-pass rewrite stages the extracted slice with partitionBy;
     // a zero-row slice writes no data files, so the read-back must use
     // an explicit schema instead of inference (round-3 ADVICE)
-    val dir = Files.createTempDirectory("graft-store-empty").toString
-    val store = new ParquetSnapshotStore(dir)
-    val snaps = CheckpointedExtract.run(spark, turns.limit(0), store,
-      buckets = 8, bucketsPerCommit = 4)
-    assert(snaps == Seq(0L, 1L))
-    assert(store.committedBuckets() == (0 until 8).toSet)
-    // idempotent: a re-run with real input finds all buckets done
-    assert(CheckpointedExtract.run(spark, turns, store, buckets = 8).isEmpty)
+    withRoot("graft-store-empty") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      val snaps = CheckpointedExtract.run(spark, turns.limit(0), store,
+        buckets = 8, bucketsPerCommit = 4)
+      assert(snaps == Seq(0L, 1L))
+      assert(store.committedBuckets() == (0 until 8).toSet)
+      // idempotent: a re-run with real input finds all buckets done
+      assert(CheckpointedExtract.run(spark, turns, store, buckets = 8).isEmpty)
+    }
   }
 
   test("lineage and metrics are committed alongside data") {
-    val dir = Files.createTempDirectory("graft-store-lineage").toString
-    val store = new ParquetSnapshotStore(dir)
-    CheckpointedExtract.run(spark, turns, store, buckets = 4, bucketsPerCommit = 4)
-    val lineage = spark.read.parquet(s"$dir/snapshot=0/_lineage")
-    val metrics = spark.read.parquet(s"$dir/snapshot=0/_metrics")
-    assert(lineage.agg(sum("n_rows")).head.getLong(0) == turns.count())
-    assert(metrics.select("platform").collect().map(_.getString(0)).toSet ==
-      Set("article", "forum", "weixin"))
-    assert(metrics.agg(sum("n_turns")).head.getLong(0) == turns.count())
+    withRoot("graft-store-lineage") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      CheckpointedExtract.run(spark, turns, store, buckets = 4, bucketsPerCommit = 4)
+      val lineage = spark.read.parquet(s"$dir/snapshot=0/_lineage")
+      val metrics = spark.read.parquet(s"$dir/snapshot=0/_metrics")
+      assert(lineage.agg(sum("n_rows")).head.getLong(0) == turns.count())
+      assert(metrics.select("platform").collect().map(_.getString(0)).toSet ==
+        Set("article", "forum", "weixin"))
+      assert(metrics.agg(sum("n_turns")).head.getLong(0) == turns.count())
+    }
   }
 
   test("lineage and metrics depend on the rows, not on the partitioning") {
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
-    def commitAt(parts: Int): String = {
+    def commitAt(parts: Int, dir: String): Unit = {
       spark.conf.set(key, parts.toString)
-      val dir = Files.createTempDirectory(s"graft-store-parts$parts").toString
       CheckpointedExtract.run(spark, turns.repartition(parts),
         new ParquetSnapshotStore(dir), buckets = 8, bucketsPerCommit = 4)
-      dir
     }
     def rows(path: String): Seq[String] =
       spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
-    try {
-      val (a, b) = (commitAt(2), commitAt(7))
-      assert(fingerprint(new ParquetSnapshotStore(a).readData(spark)) ==
-        fingerprint(new ParquetSnapshotStore(b).readData(spark)))
-      for (snap <- Seq(0, 1); table <- Seq("_lineage", "_metrics"))
-        assert(rows(s"$a/snapshot=$snap/$table") == rows(s"$b/snapshot=$snap/$table"),
-          s"snapshot=$snap/$table")
+    try withRoot("graft-store-parts2") { a =>
+      withRoot("graft-store-parts7") { b =>
+        commitAt(2, a)
+        commitAt(7, b)
+        assert(fingerprint(new ParquetSnapshotStore(a).readData(spark)) ==
+          fingerprint(new ParquetSnapshotStore(b).readData(spark)))
+        for (snap <- Seq(0, 1); table <- Seq("_lineage", "_metrics"))
+          assert(rows(s"$a/snapshot=$snap/$table") == rows(s"$b/snapshot=$snap/$table"),
+            s"snapshot=$snap/$table")
+      }
     } finally spark.conf.set(key, saved)
+  }
+
+  test("q33 leaves no store copy in the temp dir") {
+    def q33Roots(): Set[String] =
+      new java.io.File(System.getProperty("java.io.tmpdir")).list()
+        .filter(_.startsWith("graft-store-q33")).toSet
+    val before = q33Roots()
+    assert(MultimodalQueries.q33.fn(spark, sf).count() == turns.count())
+    assert(q33Roots() -- before == Set.empty)
   }
 
   test("one-pass: input is extracted once, not once per commit group") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-store-onepass").toString
-    val store = new ParquetSnapshotStore(dir)
-    val parts = 4
-    // wrap the input so every executed scan of it bumps a counter
-    val counted = turns.as[Turn].repartition(parts)
-      .mapPartitions { it => StoreSpecScanCount.n.incrementAndGet(); it }
-      .toDF()
-    StoreSpecScanCount.n.set(0)
-    // 4 commit groups — the pre-round-3 implementation re-scanned and
-    // re-extracted the input per group (counter would read 4 × parts)
-    CheckpointedExtract.run(spark, counted, store, buckets = 8, bucketsPerCommit = 2)
-    assert(StoreSpecScanCount.n.get == parts)
-    assert(store.committedBuckets() == (0 until 8).toSet)
-    assert(fingerprint(store.readData(spark)) ==
-      fingerprint(ExtractJob.run(spark, turns)))
+    withRoot("graft-store-onepass") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      val parts = 4
+      // wrap the input so every executed scan of it bumps a counter
+      val counted = turns.as[Turn].repartition(parts)
+        .mapPartitions { it => StoreSpecScanCount.n.incrementAndGet(); it }
+        .toDF()
+      StoreSpecScanCount.n.set(0)
+      // 4 commit groups — the pre-round-3 implementation re-scanned and
+      // re-extracted the input per group (counter would read 4 × parts)
+      CheckpointedExtract.run(spark, counted, store, buckets = 8, bucketsPerCommit = 2)
+      assert(StoreSpecScanCount.n.get == parts)
+      assert(store.committedBuckets() == (0 until 8).toSet)
+      assert(fingerprint(store.readData(spark)) ==
+        fingerprint(ExtractJob.run(spark, turns)))
+    }
   }
 
   test("no partial state visible without a commit") {
-    val dir = Files.createTempDirectory("graft-store-empty").toString
-    val store = new ParquetSnapshotStore(dir)
-    assert(store.currentSnapshot().isEmpty)
-    assert(store.committedBuckets().isEmpty)
-    intercept[IllegalArgumentException](store.readData(spark))
+    withRoot("graft-store-empty") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      assert(store.currentSnapshot().isEmpty)
+      assert(store.committedBuckets().isEmpty)
+      intercept[IllegalArgumentException](store.readData(spark))
+    }
   }
 
   test("incremental ingest composes with the committed store (q41 over readData)") {
@@ -174,26 +198,27 @@ class StoreSpec extends AnyFunSuite {
     // and COMMITS a corpus; day 2 admits a new batch against the
     // committed snapshot's content — re-crawled (already-committed)
     // turns must drop via the store-hash anti-join, fresh ones admit
-    val dir = Files.createTempDirectory("graft-store-ingest").toString
-    val store = new ParquetSnapshotStore(dir)
-    CheckpointedExtract.run(spark, turns, store, buckets = 4, bucketsPerCommit = 4)
-    val committed = store.readData(spark).select(
-      xxhash64(col("conv_id"), col("turn_idx")).as("doc_id"),
-      col("text_content").as("text"))
-    // batch = a re-crawl of 20 committed turns (new doc_ids — the
-    // crawler assigns fresh keys) + fresh synthetic docs
-    val s = spark; import s.implicits._
-    val recrawl = committed.orderBy(col("doc_id")).limit(20)
-      .select((col("doc_id") + 7L).as("doc_id"), col("text"))
-    val fresh = Seq(
-      (1L, "entirely new corpus content alpha beta gamma delta"),
-      (2L, "another genuinely fresh document with novel words"))
-      .toDF("doc_id", "text")
-    val admitted = graft.queries.TextPipeline
-      .incrementalIngest(committed, recrawl.unionAll(fresh))
-      .collect().map(_.getLong(0)).toSet
-    graft.queries.TempCaches.release(spark)
-    assert(admitted == Set(1L, 2L)) // every re-crawled row dropped
+    withRoot("graft-store-ingest") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      CheckpointedExtract.run(spark, turns, store, buckets = 4, bucketsPerCommit = 4)
+      val committed = store.readData(spark).select(
+        xxhash64(col("conv_id"), col("turn_idx")).as("doc_id"),
+        col("text_content").as("text"))
+      // batch = a re-crawl of 20 committed turns (new doc_ids — the
+      // crawler assigns fresh keys) + fresh synthetic docs
+      val s = spark; import s.implicits._
+      val recrawl = committed.orderBy(col("doc_id")).limit(20)
+        .select((col("doc_id") + 7L).as("doc_id"), col("text"))
+      val fresh = Seq(
+        (1L, "entirely new corpus content alpha beta gamma delta"),
+        (2L, "another genuinely fresh document with novel words"))
+        .toDF("doc_id", "text")
+      val admitted = graft.queries.TextPipeline
+        .incrementalIngest(committed, recrawl.unionAll(fresh))
+        .collect().map(_.getLong(0)).toSet
+      graft.queries.TempCaches.release(spark)
+      assert(admitted == Set(1L, 2L)) // every re-crawled row dropped
+    }
   }
 }
 
