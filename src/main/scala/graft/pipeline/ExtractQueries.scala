@@ -86,11 +86,6 @@ object ExtractQueries {
     // 100 TB (for q36 the input is a cheap parquet scan, so it stays
     // uncached there; Dataset.cache spills MEMORY_AND_DISK, so this
     // holds at any corpus size — recompute always loses to re-read).
-    // At genuine 100 TB the production variant stages the extracted
-    // frame to parquet ONCE and re-reads it (the CheckpointedExtract
-    // pattern, TranscriptStore) instead of relying on executor-local
-    // cache retention — same plan downstream, durable intermediate
-    // (round-5 VERDICT #3).
     val ex = graft.queries.TempCaches.cached(
       ExtractJob.run(s, turns).select(
         xxhash64(col("conv_id"), col("turn_idx")).as("doc_id"),

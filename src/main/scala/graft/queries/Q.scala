@@ -93,11 +93,8 @@ object TempCaches {
     *     sbt -batch "runMain graft.tools.BenchExtra - 4 q41_ingest_dedup"
     * Results are identical — the same rows, materialized once (it
     * also removes the duplicate cache-build races the sidecar logged
-    * as "Block already exists"). At production scale the equivalent
-    * is staging the intermediate to parquet/Iceberg and reading it
-    * back (the CheckpointedExtract pattern); localCheckpoint is the
-    * in-memory form. The persisted blocks are reclaimed by the
-    * ContextCleaner when the plan is dropped — and, like the lazy
+    * as "Block already exists"). The persisted blocks are reclaimed
+    * by the ContextCleaner when the plan is dropped — and, like the lazy
     * caches, is registered here so [[release]] frees the blocks
     * DETERMINISTICALLY at the end of each sweep query instead of
     * waiting for a GC cycle (40 pinned frames would otherwise

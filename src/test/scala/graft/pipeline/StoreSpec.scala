@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +24,17 @@ class StoreSpec extends AnyFunSuite {
 
   private def fingerprint(df: org.apache.spark.sql.DataFrame): Long =
     df.agg(expr("bit_xor(xxhash64(conv_id, turn_idx, text_content))")).head.getLong(0)
+
+  /** Commits the extraction of buckets 0-3 (of 8) in one snapshot, as
+    * a run that crashed after its first commit would; returns the
+    * extracted rows. */
+  private def commitFirstHalf(store: TranscriptStore): DataFrame = {
+    val ext = ExtractJob.run(spark, turns.filter(
+      pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L)))
+    store.commit(ext, CheckpointedExtract.lineageOf(ext),
+      CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
+    ext
+  }
 
   /** Runs `body` on a fresh store root and deletes the root after it. */
   private def withRoot[T](prefix: String)(body: String => T): T = {
@@ -43,11 +58,7 @@ class StoreSpec extends AnyFunSuite {
     withRoot("graft-store-resume") { dir =>
       val store = new ParquetSnapshotStore(dir)
       // simulate a crash after the first commit: only buckets 0-3
-      val firstHalf = turns.filter(
-        pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
-      val ext = ExtractJob.run(spark, firstHalf)
-      store.commit(ext, CheckpointedExtract.lineageOf(ext),
-        CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
+      commitFirstHalf(store)
       assert(store.committedBuckets() == Set(0, 1, 2, 3))
       // resumed run processes ONLY the remaining buckets
       val snaps = CheckpointedExtract.run(spark, turns, store, buckets = 8, bucketsPerCommit = 4)
@@ -61,11 +72,7 @@ class StoreSpec extends AnyFunSuite {
   test("resume: an orphaned unpublished snapshot does not block the next commit") {
     withRoot("graft-store-orphan") { dir =>
       val store = new ParquetSnapshotStore(dir)
-      val firstHalf = turns.filter(
-        pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
-      val ext = ExtractJob.run(spark, firstHalf)
-      store.commit(ext, CheckpointedExtract.lineageOf(ext),
-        CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
+      commitFirstHalf(store)
       // a crash between the publish rename and the pointer swap leaves
       // snapshot=<current+1> on disk, unreferenced by _current
       val orphan = java.nio.file.Paths.get(dir,
@@ -83,11 +90,7 @@ class StoreSpec extends AnyFunSuite {
   test("a failed commit removes its staging directory and publishes nothing") {
     withRoot("graft-store-failed") { dir =>
       val store = new ParquetSnapshotStore(dir)
-      val firstHalf = turns.filter(
-        pmod(xxhash64(col("conv_id")), lit(8)).isin(0L, 1L, 2L, 3L))
-      val ext = ExtractJob.run(spark, firstHalf)
-      store.commit(ext, CheckpointedExtract.lineageOf(ext),
-        CheckpointedExtract.metricsOf(ext), Seq(0, 1, 2, 3))
+      val ext = commitFirstHalf(store)
       val snapshot = store.currentSnapshot()
       val before = fingerprint(store.readData(spark))
       // the data write fails at run time, on one row, while the
@@ -104,10 +107,81 @@ class StoreSpec extends AnyFunSuite {
     }
   }
 
+  test("each committed byte is written once") {
+    withRoot("graft-store-written") { dir =>
+      val sc = spark.sparkContext
+      val written = new AtomicLong()
+      val listener = new SparkListener {
+        override def onTaskEnd(end: SparkListenerTaskEnd): Unit =
+          Option(end.taskMetrics).foreach(m => written.addAndGet(m.outputMetrics.bytesWritten))
+      }
+      ListenerBusDrain.drain(sc) // no earlier job's tasks reach the listener
+      sc.addSparkListener(listener)
+      try {
+        assert(CheckpointedExtract.run(spark, turns, new ParquetSnapshotStore(dir),
+          buckets = 8, bucketsPerCommit = 4) == Seq(0L, 1L))
+        ListenerBusDrain.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      val files = Files.walk(Paths.get(dir))
+      val stored = try files.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
+        finally files.close()
+      assert(written.get > 0)
+      // the store's own files are the only output: an intermediate copy
+      // of the extracted rows (a staging directory) would about double it
+      assert(written.get <= 1.1 * stored, s"${written.get} bytes written, $stored stored")
+    }
+  }
+
+  test("a commit of already committed buckets is refused") {
+    withRoot("graft-store-twice") { dir =>
+      val store = new ParquetSnapshotStore(dir)
+      val ext = commitFirstHalf(store)
+      val snapshot = store.currentSnapshot()
+      val (rows, before) = (store.readData(spark).count(), fingerprint(store.readData(spark)))
+      for (again <- Seq(Seq(0, 1, 2, 3), Seq(3, 4)))
+        intercept[IllegalArgumentException](store.commit(ext, CheckpointedExtract.lineageOf(ext),
+          CheckpointedExtract.metricsOf(ext), again))
+      assert(store.currentSnapshot() == snapshot)
+      assert(store.committedBuckets() == Set(0, 1, 2, 3))
+      assert(store.readData(spark).count() == rows)
+      assert(fingerprint(store.readData(spark)) == before)
+    }
+  }
+
+  test("a second writer cannot commit while a commit is in progress") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    withRoot("graft-store-writers") { dir =>
+      val bucket = pmod(xxhash64(col("conv_id")), lit(8))
+      val first = ExtractJob.run(spark, turns.filter(bucket.isin(0L, 1L, 2L, 3L)))
+      // writer A's data write blocks in its one task until released
+      val blocked = first.coalesce(1).mapPartitions { it =>
+        StoreSpecGate.entered.countDown()
+        require(StoreSpecGate.release.await(120, TimeUnit.SECONDS), "never released")
+        it
+      }(Encoders.row(first.schema))
+      val a = Future(new ParquetSnapshotStore(dir).commit(blocked,
+        CheckpointedExtract.lineageOf(first), CheckpointedExtract.metricsOf(first), Seq(0, 1, 2, 3)))
+      try {
+        assert(StoreSpecGate.entered.await(120, TimeUnit.SECONDS))
+        val second = ExtractJob.run(spark, turns.filter(bucket.isin(4L, 5L, 6L, 7L)))
+        intercept[IllegalStateException](new ParquetSnapshotStore(dir).commit(second,
+          CheckpointedExtract.lineageOf(second), CheckpointedExtract.metricsOf(second),
+          Seq(4, 5, 6, 7)))
+      } finally StoreSpecGate.release.countDown()
+      assert(Await.result(a, 5.minutes) == 0L)
+      val store = new ParquetSnapshotStore(dir)
+      assert(store.currentSnapshot() == Some(0L))
+      assert(store.committedBuckets() == Set(0, 1, 2, 3))
+      assert(fingerprint(store.readData(spark)) == fingerprint(first))
+      assert(!new java.io.File(dir).list().exists(_.startsWith("_tmp_")))
+    }
+  }
+
   test("empty input still commits every todo bucket (resume/empty-corpus)") {
-    // the one-pass rewrite stages the extracted slice with partitionBy;
-    // a zero-row slice writes no data files, so the read-back must use
-    // an explicit schema instead of inference (round-3 ADVICE)
+    // a zero-row slice persists no rows; each commit group must still
+    // commit its buckets, with empty data, lineage and metrics
     withRoot("graft-store-empty") { dir =>
       val store = new ParquetSnapshotStore(dir)
       val snaps = CheckpointedExtract.run(spark, turns.limit(0), store,
@@ -174,8 +248,8 @@ class StoreSpec extends AnyFunSuite {
         .mapPartitions { it => StoreSpecScanCount.n.incrementAndGet(); it }
         .toDF()
       StoreSpecScanCount.n.set(0)
-      // 4 commit groups — the pre-round-3 implementation re-scanned and
-      // re-extracted the input per group (counter would read 4 × parts)
+      // 4 commit groups, all filtering the one persisted slice; an
+      // extraction per group would read 4 × parts
       CheckpointedExtract.run(spark, counted, store, buckets = 8, bucketsPerCommit = 2)
       assert(StoreSpecScanCount.n.get == parts)
       assert(store.committedBuckets() == (0 until 8).toSet)
@@ -226,4 +300,11 @@ class StoreSpec extends AnyFunSuite {
   * threads share this object). */
 object StoreSpecScanCount {
   val n = new java.util.concurrent.atomic.AtomicLong()
+}
+
+/** Latches for the second-writer test: the data write of the first
+  * commit enters, then waits for the test to release it. */
+object StoreSpecGate {
+  val entered = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
 }
