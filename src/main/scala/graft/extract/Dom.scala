@@ -184,19 +184,26 @@ private[extract] object Serializer {
     }
     case c: CommentNode => sb.append("<!--").append(c.data).append("-->")
     case e: Element =>
-      if (e.tag == "#root") e.children.foreach(write(_, sb))
-      else {
-        sb.append('<').append(e.tag)
-        e.attrs.foreach { case (k, v) =>
-          sb.append(' ').append(k).append("=\"")
-          escAttr(v, sb)
-          sb.append('"')
-        }
-        sb.append('>')
-        if (!Dom.VoidTags.contains(e.tag)) {
-          e.children.foreach(write(_, sb))
-          sb.append("</").append(e.tag).append('>')
-        }
+      writeOpen(e, sb)
+      if (!Dom.VoidTags.contains(e.tag)) {
+        e.children.foreach(write(_, sb))
+        writeClose(e, sb)
       }
   }
+
+  /** An element's start tag; the synthetic `#root` has none. */
+  def writeOpen(e: Element, sb: StringBuilder): Unit =
+    if (e.tag != "#root") {
+      sb.append('<').append(e.tag)
+      e.attrs.foreach { case (k, v) =>
+        sb.append(' ').append(k).append("=\"")
+        escAttr(v, sb)
+        sb.append('"')
+      }
+      sb.append('>')
+    }
+
+  /** An element's end tag (never written for a void element). */
+  def writeClose(e: Element, sb: StringBuilder): Unit =
+    if (e.tag != "#root") sb.append("</").append(e.tag).append('>')
 }

@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 /** Extraction options — the two thresholds the reference's live path
   * reads from ExtractorOptions
   * (/root/reference/app/types/extractor.ts:19-24; defaults
@@ -49,6 +51,12 @@ final case class ExtractResult(
   *    conversation-level reassembly is a Spark op instead
   *    (graft.pipeline.Reassembly).
   *
+  * Scoring reads one [[SubtreeStats]] pass instead of walking each
+  * scored element's subtree (the reference's calculateNodeScore and
+  * calculateContentScore do, per candidate), so the heuristic stage
+  * costs O(page) however deep the candidates nest; the scores are
+  * bit-equal to the per-element formulas.
+  *
   * Instances are stateful per call (document, counters) — use one
   * instance per thread/partition, like the reference's cached
   * singletons but partition-scoped (SURVEY.md §7.1).
@@ -65,7 +73,7 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
   protected var nodesScored: Int = 0
   protected var fallbackStage: Int = 0
 
-  protected def textLengthOf(e: Element): Int = e.text.trim.length
+  private def textLengthOf(e: Element): Int = e.text.trim.length
 
   // ---- whitespace pre-collapse (every subclass extract,
   //      e.g. ArticleExtractor.ts:161-164) ----
@@ -137,12 +145,15 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
 
   /** BaseExtractor.ts:166-177 — removes every element with no
     * trimmed text and no descendant img/video/iframe (kills
-    * meta/img/br/hr/iframe leaves; see class doc). */
+    * meta/img/br/hr/iframe leaves; see class doc). The verdicts are
+    * taken before the first removal: the reference's pre-order walk
+    * tests ancestors first, removing a blank, media-free element
+    * changes no verdict still to come, and removals inside a detached
+    * subtree cannot be seen. */
   protected def cleanEmptyNodes(): Unit = {
-    val snapshot = doc.descendants.toList
-    snapshot.foreach { e =>
-      if (e.text.trim.isEmpty && e.select("img, video, iframe").isEmpty)
-        e.remove()
+    val s = new SubtreeStats(doc, Seq(Media))
+    (1 until s.size).foreach { i =>
+      if (s.isBlank(i) && s.count(i, Media) == 0) s.element(i).remove()
     }
   }
 
@@ -206,77 +217,83 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
     }
   }
 
-  private val ExcludeTags = Set("nav", "header", "footer", "aside", "style",
-    "script", "meta", "link")
-
   /** BaseExtractor.ts:326-360 */
-  protected def isValidContent(e: Element): Boolean = {
-    if (ExcludeTags.contains(e.tag)) return false
-    if (calculateNodeScore(e) < options.minScore) return false
-    val textLength = textLengthOf(e)
+  protected def isValidContent(e: Element): Boolean = validContent(statsOf(e), 0)
+
+  protected[extract] def validContent(s: SubtreeStats, i: Int): Boolean = {
+    if (ExcludeTags.contains(s.element(i).tag)) return false
+    if (nodeScore(s, i) < options.minScore) return false
+    val textLength = s.trimmedLength(i)
     if (textLength < options.minTextLength) return false
-    val linkLength = e.select("a").headOption.map(textLengthOf).getOrElse(0)
-    val linkDensity = linkLength.toDouble / textLength
+    val linkDensity = s.firstLinkLength(i).toDouble / textLength
     linkDensity <= 0.5
   }
 
-  /** BaseExtractor.ts:639-664 */
+  /** BaseExtractor.ts:639-664 — scores every div/article/section/main
+    * from one [[SubtreeStats]] pass over the document. */
   protected def findBestNode(): Option[Element] = {
-    var best: Element = null
+    val s = statsOf(doc)
+    var best = -1
     var maxScore = -1.0
-    doc.select("div, article, section, main").foreach { e =>
-      val score = calculateContentScore(e)
-      if (score > maxScore) { maxScore = score; best = e }
+    (1 until s.size).foreach { i =>
+      if (CandidateTags.contains(s.element(i).tag)) {
+        val score = contentScore(s, i)
+        if (score > maxScore) { maxScore = score; best = i }
+      }
     }
-    if (best != null && isValidContent(best)) Some(best) else None
+    if (best >= 0 && validContent(s, best)) Some(s.element(best)) else None
   }
 
   // ---- scoring (BaseExtractor.ts:251-297, 669-726) ----
 
-  /** Base node score — overridden per platform with additive deltas. */
-  def calculateNodeScore(e: Element): Int = {
+  /** The selectors whose descendant counts the node score reads. */
+  protected def countedSelectors: Seq[String] = BaseCounted
+
+  private[extract] def statsOf(e: Element): SubtreeStats = new SubtreeStats(e, countedSelectors)
+
+  /** Node score of `e`, from a stats pass over `e`'s subtree. */
+  final def calculateNodeScore(e: Element): Int = nodeScore(statsOf(e), 0)
+
+  /** Content score of `e`, from a stats pass over `e`'s subtree. */
+  final def calculateContentScore(e: Element): Double = contentScore(statsOf(e), 0)
+
+  /** Base node score of element i — overridden per platform with
+    * additive deltas. */
+  protected[extract] def nodeScore(s: SubtreeStats, i: Int): Int = {
     nodesScored += 1
+    val e = s.element(i)
     var score = 0
     score += TagWeights.getOrElse(e.tag, 0)
     e.classNames.foreach { cn =>
-      val lc = cn.toLowerCase
+      val lc = cn.toLowerCase(Locale.ROOT)
       score += PositiveClassWeights.getOrElse(lc, 0)
       score += NegativeClassWeights.getOrElse(lc, 0)
     }
-    val textLength = textLengthOf(e)
-    val linkLength = e.select("a").headOption.map(textLengthOf).getOrElse(0)
+    val textLength = s.trimmedLength(i)
+    val linkLength = s.firstLinkLength(i)
     val linkDensity = linkLength.toDouble / (if (textLength == 0) 1 else textLength)
     score += math.min(textLength / 100, 10)
     if (linkDensity > 0.5) score -= math.floor(linkDensity * 10).toInt
-    score += math.min(e.select("img").length * 2, 8)
-    score += math.min(e.select("p").length, 5)
-    score += math.min(e.select("h1, h2, h3, h4, h5, h6").length * 2, 6)
+    score += math.min(s.count(i, Img) * 2, 8)
+    score += math.min(s.count(i, P), 5)
+    score += math.min(s.count(i, Headings) * 2, 6)
     score
   }
 
-  def calculateContentScore(e: Element): Double = {
-    var score: Double = calculateNodeScore(e).toDouble
-    val textLength = textLengthOf(e)
-    val nodeHtml = e.innerHtml
-    val nodeLength = nodeHtml.length
+  protected[extract] def contentScore(s: SubtreeStats, i: Int): Double = {
+    var score: Double = nodeScore(s, i).toDouble
+    val textLength = s.trimmedLength(i)
+    val nodeLength = s.innerHtmlLength(i)
     score += textLength.toDouble / (if (nodeLength == 0) 1 else nodeLength) * 10
-    var pScore = 0
-    e.select("p").foreach { p =>
-      val t = p.text.trim
-      if (t.length > 50) pScore += 2
-      if (Regexes.Punct.matcher(t).find()) pScore += 1
-    }
-    score += math.min(pScore, 30)
-    score += (if (e.select("img").nonEmpty) 5 else 0)
-    score += (if (e.select("table").nonEmpty) 5 else 0)
-    score += (if (e.select("ul, ol").nonEmpty) 3 else 0)
-    score += (if (e.select("pre, code").nonEmpty) 3 else 0)
-    score -= e.depth
-    val linkText = e.select("a").map(_.text).mkString.trim
-    score -= linkText.length.toDouble / (if (textLength == 0) 1 else textLength) * 20
-    val htmlLower = nodeHtml.toLowerCase
-    Seq("article", "content", "post", "entry", "main", "text").foreach { kw =>
-      if (htmlLower.contains(kw)) score += 2
+    score += math.min(s.pScore(i), 30)
+    score += (if (s.count(i, Img) > 0) 5 else 0)
+    score += (if (s.count(i, Table) > 0) 5 else 0)
+    score += (if (s.count(i, Lists) > 0) 3 else 0)
+    score += (if (s.count(i, Code) > 0) 3 else 0)
+    score -= s.depth(i)
+    score -= s.linkTextLength(i).toDouble / (if (textLength == 0) 1 else textLength) * 20
+    ContentKeywords.foreach { kw =>
+      if (s.holds(i, kw)) score += 2
     }
     math.max(0, score)
   }
@@ -295,7 +312,7 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
   /** BaseExtractor.ts:302-321 */
   protected def cleanAttributes(e: Element): Unit = {
     e.attrs.keys.toList.foreach { a =>
-      if (!Selectors.KeepAttributes.contains(a.toLowerCase)) e.removeAttr(a)
+      if (!Selectors.KeepAttributes.contains(a.toLowerCase(Locale.ROOT))) e.removeAttr(a)
     }
     e.childElements.foreach(cleanAttributes)
   }
@@ -502,17 +519,32 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
 }
 
 private object BaseExtractor {
+  // selectors whose descendant counts the base scores read
+  val Img = "img"
+  val P = "p"
+  val Headings = "h1, h2, h3, h4, h5, h6"
+  val Table = "table"
+  val Lists = "ul, ol"
+  val Code = "pre, code"
+  val Media = "img, video, iframe"
+  val BaseCounted: Seq[String] = Seq(Img, P, Headings, Table, Lists, Code)
+  val CandidateTags: Set[String] = Set("div", "article", "section", "main")
+  val ContentKeywords: Seq[String] = Seq("article", "content", "post", "entry", "main", "text")
+
+  /** BaseExtractor.ts:326-360 */
+  val ExcludeTags: Set[String] = Set("nav", "header", "footer", "aside", "style",
+    "script", "meta", "link")
   /** BaseExtractor.ts:8-19 */
-  private val TagWeights: Map[String, Int] = Map(
+  val TagWeights: Map[String, Int] = Map(
     "article" -> 10, "main" -> 8, "section" -> 6, "div" -> 4,
     "p" -> 3, "pre" -> 3, "code" -> 3, "blockquote" -> 2,
     "figure" -> 2, "table" -> 2)
   /** BaseExtractor.ts:22-29 */
-  private val PositiveClassWeights: Map[String, Int] = Map(
+  val PositiveClassWeights: Map[String, Int] = Map(
     "article" -> 8, "content" -> 8, "post" -> 6, "entry" -> 6,
     "text" -> 4, "body" -> 4)
   /** BaseExtractor.ts:32-40 */
-  private val NegativeClassWeights: Map[String, Int] = Map(
+  val NegativeClassWeights: Map[String, Int] = Map(
     "sidebar" -> -8, "comment" -> -6, "advertisement" -> -8, "ad" -> -8,
     "nav" -> -6, "footer" -> -6, "header" -> -4)
 }

@@ -1,5 +1,6 @@
 package graft.extract
 
+import java.util.Locale
 import scala.collection.mutable.ArrayBuffer
 
 /** Lenient HTML5-ish parser: never throws, handles unclosed /
@@ -124,7 +125,7 @@ object HtmlParser {
           flushText()
           var j = i + 2
           while (j < n && html.charAt(j) != '>') j += 1
-          val name = html.substring(i + 2, j).trim.toLowerCase
+          val name = html.substring(i + 2, j).trim.toLowerCase(Locale.ROOT)
             .takeWhile(ch => ch.isLetterOrDigit || ch == '-' || ch == ':')
           if (name.nonEmpty && stack.exists(e => e.tag == name && (e ne root))) {
             while (stack.length > 1 && cur.tag != name) stack.remove(stack.length - 1)

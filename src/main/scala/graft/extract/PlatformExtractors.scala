@@ -1,5 +1,7 @@
 package graft.extract
 
+import BaseExtractor.{BaseCounted, Headings, Img, P}
+
 /** Article extractor — /root/reference/app/lib/extractors/
   * ArticleExtractor.ts (live path only; preProcess is dead code).
   */
@@ -30,20 +32,25 @@ class ArticleExtractor extends BaseExtractor(
     }
   }
 
+  private val Ads = ".ad, .advertisement, .banner"
+  private val Comments = ".comment, .comments, #comments"
+  override protected val countedSelectors: Seq[String] = BaseCounted ++ Seq(Ads, Comments)
+
   /** ArticleExtractor.ts:222-267 */
-  override def calculateNodeScore(e: Element): Int = {
-    var score = super.calculateNodeScore(e)
+  override protected[extract] def nodeScore(s: SubtreeStats, i: Int): Int = {
+    var score = super.nodeScore(s, i)
+    val e = s.element(i)
     if (e.tag == "article" || e.hasClass("article")) score += 15
-    val textLength = textLengthOf(e)
+    val textLength = s.trimmedLength(i)
     if (textLength > 100) score += math.min(textLength / 100, 10)
-    val imageCount = e.select("img").length
+    val imageCount = s.count(i, Img)
     if (imageCount > 0) score += math.min(imageCount * 2, 10)
-    val headingCount = e.select("h1, h2, h3, h4, h5, h6").length
+    val headingCount = s.count(i, Headings)
     if (headingCount > 0) score += headingCount * 4
-    val paragraphCount = e.select("p").length
+    val paragraphCount = s.count(i, P)
     if (paragraphCount > 0) score += math.min(paragraphCount, 5)
-    if (e.select(".ad, .advertisement, .banner").nonEmpty) score -= 10
-    if (e.select(".comment, .comments, #comments").nonEmpty) score -= 8
+    if (s.count(i, Ads) > 0) score -= 10
+    if (s.count(i, Comments) > 0) score -= 8
     score
   }
 
@@ -98,14 +105,19 @@ class ForumExtractor extends BaseExtractor(
 
   override protected def getCustomSelectors: Seq[String] = Selectors.ForumCustom
 
+  private val Quotes = ".quote, blockquote, .cited"
+  private val UserInfo = ".user-info, .author-info"
+  override protected val countedSelectors: Seq[String] = BaseCounted ++ Seq(Quotes, UserInfo)
+
   /** ForumExtractor.ts:278-310 */
-  override def calculateNodeScore(e: Element): Int = {
-    var score = super.calculateNodeScore(e)
+  override protected[extract] def nodeScore(s: SubtreeStats, i: Int): Int = {
+    var score = super.nodeScore(s, i)
+    val e = s.element(i)
     if (e.hasClass("first-post") || e.hasClass("main-post")) score += 15
     if (e.hasClass("reply-content") || e.hasClass("comment-content")) score += 8
-    if (e.select(".quote, blockquote, .cited").nonEmpty) score -= 5
-    if (e.select(".user-info, .author-info").nonEmpty) score -= 3
-    val textLength = textLengthOf(e)
+    if (s.count(i, Quotes) > 0) score -= 5
+    if (s.count(i, UserInfo) > 0) score -= 3
+    val textLength = s.trimmedLength(i)
     if (textLength > 100) score += math.min(textLength / 200, 8)
     score
   }
@@ -113,7 +125,7 @@ class ForumExtractor extends BaseExtractor(
   /** ForumExtractor.ts:315-350 */
   override protected def postProcess(element: Element): Unit = {
     super.postProcess(element)
-    element.select(".quote, blockquote, .cited").foreach(_.addClass("forum-quote"))
+    element.select(Quotes).foreach(_.addClass("forum-quote"))
     recodeCodeBlocks(element, "forum-code")
     wrapImages(element, "forum-image-container", Some("forum-image-caption"))
     collapseBrRuns(element)
@@ -147,17 +159,22 @@ class WeixinExtractor extends BaseExtractor(
 
   override protected def getCustomSelectors: Seq[String] = Selectors.WeixinCustom
 
+  private val Videos = "iframe, .video_iframe"
+  private val AdAreas = ".advertisement_area, .reward_area"
+  override protected val countedSelectors: Seq[String] = BaseCounted ++ Seq(Videos, AdAreas)
+
   /** WeixinExtractor.ts:281-315 */
-  override def calculateNodeScore(e: Element): Int = {
-    var score = super.calculateNodeScore(e)
+  override protected[extract] def nodeScore(s: SubtreeStats, i: Int): Int = {
+    var score = super.nodeScore(s, i)
+    val e = s.element(i)
     if (e.id.contains("js_content") || e.hasClass("rich_media_content")) score += 20
-    val textLength = textLengthOf(e)
+    val textLength = s.trimmedLength(i)
     if (textLength > 100) score += math.min(textLength / 100, 10)
-    val imageCount = e.select("img").length
+    val imageCount = s.count(i, Img)
     if (imageCount > 0) score += math.min(imageCount * 2, 10)
-    val videoCount = e.select("iframe, .video_iframe").length
+    val videoCount = s.count(i, Videos)
     if (videoCount > 0) score += videoCount * 5
-    if (e.select(".advertisement_area, .reward_area").nonEmpty) score -= 15
+    if (s.count(i, AdAreas) > 0) score -= 15
     score
   }
 
@@ -220,10 +237,13 @@ final class ExtractorSet {
 
   /** Total per-turn extraction: guards become Left (quarantine row),
     * never a thrown task failure (route.ts error semantics mapped to
-    * row-level errors, SURVEY.md §2.1). The recursive DOM walks
-    * overflow the stack on pathologically deep nesting (thousands of
-    * unclosed `<div>`s); that is quarantined too, with a fixed message
-    * because StackOverflowError carries none.
+    * row-level errors, SURVEY.md §2.1). Scoring, empty-node removal
+    * and the renderers' blank tests are iterative and linear in the
+    * page; the remaining recursive DOM walks (text, select, serializer,
+    * normalization, post-processing) overflow the stack on
+    * pathologically deep nesting (thousands of unclosed `<div>`s);
+    * that is quarantined too, with a fixed message because
+    * StackOverflowError carries none.
     */
   def extract(html: String, url: String,
               renderFormats: Boolean = false): Either[String, ExtractResult] =

@@ -1,5 +1,7 @@
 package graft.extract
 
+import scala.collection.mutable.ArrayBuffer
+
 /** Plain-text rendering of extracted content HTML — reference
   * `extractText` (/root/reference/app/api/extract/route.ts:12-72).
   *
@@ -31,10 +33,15 @@ object TextRenderer {
       }
     }
 
+    // p/div blankness, taken once: every node inserted before or
+    // during the p/div step is whitespace, so no verdict changes
+    val stats = new SubtreeStats(doc, Nil)
     doc.select("h1, h2, h3, h4, h5, h6").foreach(h =>
       insertAround(h, Some("\n\n"), Some("\n\n")))
-    doc.select("p, div").foreach { e =>
-      if (e.text.trim.nonEmpty) insertAround(e, None, Some("\n\n"))
+    (1 until stats.size).foreach { i =>
+      val e = stats.element(i)
+      if ((e.tag == "p" || e.tag == "div") && !stats.isBlank(i))
+        insertAround(e, None, Some("\n\n"))
     }
     doc.select("br").foreach { br =>
       val p = br.parent
@@ -82,29 +89,43 @@ object MarkdownRenderer {
   /** Render directly from a DOM container (read-only walk). */
   def renderFrom(doc: Element): String = {
     val body = doc.select("body").headOption.getOrElse(doc)
-    val out = renderChildren(body, ordered = false)
+    val out = renderChildren(body)
     // turndown trims and collapses 3+ newlines
     NlRuns.matcher(out).replaceAll("\n\n").trim
   }
 
   private val NlRuns = java.util.regex.Pattern.compile("\\n{3,}")
 
-  private def renderChildren(e: Element, ordered: Boolean): String = {
+  private def renderChildren(e: Element): String = {
     val sb = new StringBuilder
-    var liIndex = 0
-    e.children.foreach {
-      case t: TextNode    => sb.append(escapeText(t.data))
-      case _: CommentNode => ()
-      case c: Element =>
-        if (c.tag == "li") liIndex += 1
-        sb.append(renderElement(c, ordered, liIndex))
-    }
+    appendChildren(e, sb)
     sb.toString
+  }
+
+  /** Containers render as their children, so they are walked with an
+    * explicit stack and append in place: a string returned per level
+    * would copy nested content once per level, and a call per level
+    * would bound the nesting by the thread stack. */
+  private def appendChildren(e: Element, sb: StringBuilder): Unit = {
+    val open = ArrayBuffer(e.children.iterator)
+    while (open.nonEmpty) {
+      val it = open.last
+      if (!it.hasNext) open.remove(open.length - 1)
+      else it.next() match {
+        case t: TextNode    => sb.append(escapeText(t.data))
+        case _: CommentNode => ()
+        case c: Element =>
+          val out = renderElement(c)
+          if (out == null) open += c.children.iterator else sb.append(out)
+      }
+    }
   }
 
   private def block(s: String): String = "\n\n" + s + "\n\n"
 
-  private def renderElement(e: Element, inOrdered: Boolean, liIndex: Int): String = e.tag match {
+  /** `e`'s rendering, or null for a container, which renders as its
+    * children. */
+  private def renderElement(e: Element): String = e.tag match {
     case t if KeepRaw.contains(t) => e.outerHtml
     case "h1" | "h2" | "h3" | "h4" | "h5" | "h6" =>
       val level = e.tag.charAt(1) - '0'
@@ -112,7 +133,7 @@ object MarkdownRenderer {
     case "p" => block(inline(e))
     case "div" | "section" | "article" | "main" | "figure" | "header" |
          "footer" | "aside" | "nav" | "body" =>
-      renderChildren(e, ordered = false)
+      null
     case "br" => "  \n"
     case "hr" => block("---")
     case "em" | "i" => wrapNonEmpty(inline(e), "*")
@@ -127,12 +148,12 @@ object MarkdownRenderer {
         .orElse(e.attr("data-language")).getOrElse("")
       block("```" + lang + "\n" + e.text + "\n```")
     case "blockquote" =>
-      val inner = renderChildren(e, ordered = false).trim
+      val inner = renderChildren(e).trim
       block(inner.split("\n", -1).map(l => ("> " + l).stripTrailing).mkString("\n"))
     case "ul" => block(renderList(e, ordered = false))
     case "ol" => block(renderList(e, ordered = true))
     case "li" => // li outside list context: render as bullet
-      "- " + renderChildren(e, ordered = false).trim + "\n"
+      "- " + renderChildren(e).trim + "\n"
     case "img" =>
       val alt = e.attr("alt").getOrElse("")
       val src = e.attr("src").getOrElse("")
@@ -151,14 +172,14 @@ object MarkdownRenderer {
       inline(e)
     case "script" | "style" | "head" | "meta" | "link" | "iframe" |
          "form" | "input" | "button" | "select" | "option" => ""
-    case _ => renderChildren(e, ordered = false)
+    case _ => null
   }
 
   private def renderList(list: Element, ordered: Boolean): String = {
     val items = list.childElements.filter(_.tag == "li")
     items.zipWithIndex.map { case (li, i) =>
       val marker = if (ordered) s"${i + 1}. " else "- "
-      val inner = renderChildren(li, ordered).trim
+      val inner = renderChildren(li).trim
       val indented = inner.split("\n", -1).zipWithIndex.map {
         case (l, 0) => marker + l
         case (l, _) => "   " + l
@@ -167,7 +188,7 @@ object MarkdownRenderer {
     }.mkString("\n")
   }
 
-  private def inline(e: Element): String = renderChildren(e, ordered = false).trim
+  private def inline(e: Element): String = renderChildren(e).trim
 
   private def wrapNonEmpty(s: String, mark: String): String =
     if (s.isEmpty) "" else mark + s + mark

@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 /** CSS selector subset engine — exactly the grammar the reference's
   * selector constants use (/root/reference/app/types/extractor.ts:
   * 44-145, extractor custom lists, ForumExtractor `[id*=post-1]`):
@@ -76,7 +78,7 @@ object Selector {
     }
     if (i < n && s.charAt(i) == '*') { i += 1 } // universal: no constraint
     else if (i < n && s.charAt(i).isLetter) {
-      val (t, j) = ident(i); sels += TagSel(t.toLowerCase); i = j
+      val (t, j) = ident(i); sels += TagSel(t.toLowerCase(Locale.ROOT)); i = j
     }
     while (i < n) {
       s.charAt(i) match {
@@ -90,7 +92,7 @@ object Selector {
           else {
             val body = s.substring(i + 1, close)
             val opIdx = body.indexWhere(c => c == '*' || c == '^' || c == '$' || c == '=')
-            if (opIdx < 0) sels += AttrSel(body.trim.toLowerCase, "", "")
+            if (opIdx < 0) sels += AttrSel(body.trim.toLowerCase(Locale.ROOT), "", "")
             else {
               val (name, op, rest) =
                 if (body.charAt(opIdx) == '=') (body.substring(0, opIdx), "=", body.substring(opIdx + 1))
@@ -98,7 +100,7 @@ object Selector {
               val v0 = rest.trim
               val v = if (v0.length >= 2 && (v0.head == '"' || v0.head == '\'') && v0.last == v0.head)
                 v0.substring(1, v0.length - 1) else v0
-              sels += AttrSel(name.trim.toLowerCase, op, v)
+              sels += AttrSel(name.trim.toLowerCase(Locale.ROOT), op, v)
             }
             i = close + 1
           }
@@ -175,6 +177,15 @@ object Selector {
             false
         }
     }
+
+  /** A matcher for a comma list of compound selectors (no
+    * combinators, so a match does not depend on a scope). */
+  def compoundList(selector: String): Element => Boolean = {
+    val complexes = parseList(selector)
+    require(complexes.forall(_.length == 1), s"not a list of compound selectors: $selector")
+    val alternatives = complexes.map(_.head.sels)
+    e => alternatives.exists(matchesCompound(e, _))
+  }
 
   def select(scope: Element, selector: String): Seq[Element] = {
     val complexes = parseList(selector)

@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 /** Title extraction cascade — reference
   * /root/reference/app/lib/extractors/TitleExtractor.ts:10-136 —
   * meta → headings-by-Dice-similarity → <title> → fallback selectors,
@@ -71,13 +73,15 @@ object TitleExtract {
 
   /** Dice coefficient on lowercase whitespace tokens
     * (/root/reference/app/utils/similarity.ts:4-20): multiset-ish —
-    * counts words of w1 that appear anywhere in w2. */
+    * counts words of w1 that appear anywhere in w2, so a hash set of
+    * w2's words is all the count needs. */
   def dice(s1: String, s2: String): Double = {
     if (s1 == s2) return 1.0
     if (s1.isEmpty || s2.isEmpty) return 0.0
-    val w1 = Regexes.UWs.split(s1.toLowerCase).toSeq
-    val w2 = Regexes.UWs.split(s2.toLowerCase).toSeq
-    val common = w1.count(w2.contains)
+    val w1 = Regexes.UWs.split(s1.toLowerCase(Locale.ROOT))
+    val w2 = Regexes.UWs.split(s2.toLowerCase(Locale.ROOT))
+    val inW2 = w2.toSet
+    val common = w1.count(inW2.contains)
     2.0 * common / (w1.length + w2.length)
   }
 

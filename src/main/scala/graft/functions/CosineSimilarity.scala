@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -168,14 +169,16 @@ case class PolyHash(first: Expression, second: Expression, third: Expression)
 }
 
 object GraftFunctions {
-  /** Idempotent per-session registration; call from query fns, use
-    * via functions.call_function("cosine_sim", a, b). */
+  /** Idempotent per-session registration: registers only the functions
+    * the session lacks. Call from query fns, use via
+    * functions.call_function("cosine_sim", a, b). */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_fd", exprs => DotFloatDouble(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs.head, exprs(1), exprs(2)), "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    def add(name: String, build: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "scala_udf")
+    add("cosine_sim", exprs => CosineSimilarity(exprs.head, exprs(1)))
+    add("dot_fd", exprs => DotFloatDouble(exprs.head, exprs(1)))
+    add("poly_hash", exprs => PolyHash(exprs.head, exprs(1), exprs(2)))
   }
 }

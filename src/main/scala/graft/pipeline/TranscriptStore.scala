@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.DecimalType
   * is a thin trait with a Parquet implementation that emulates the
   * snapshot semantics the job relies on:
   *
-  *  - every commit writes data + `_lineage` + `_metrics` into a new
+  *  - every commit writes the `data`, `lineage` and `metrics` tables
+  *    (names without a leading `_` or `.`, which Spark's file listing
+  *    would skip as hidden) into a new
   *    `snapshot=<n>` directory, staged under `_tmp_<uuid>` and made
   *    visible by a SINGLE atomic directory rename (the Iceberg
   *    analogue of a snapshot commit — readers never observe partial
@@ -101,9 +103,9 @@ final class ParquetSnapshotStore(root: String) extends TranscriptStore {
       Future(data.write.mode(SaveMode.Overwrite)
         .parquet(staging.resolve("data").toString)),
       Future(lineage.write.mode(SaveMode.Overwrite)
-        .parquet(staging.resolve("_lineage").toString)),
+        .parquet(staging.resolve("lineage").toString)),
       Future(metrics.write.mode(SaveMode.Overwrite)
-        .parquet(staging.resolve("_metrics").toString)))
+        .parquet(staging.resolve("metrics").toString)))
     try Await.result(Future.sequence(writes), Duration.Inf)
     catch { case e: Throwable =>
       // Future.sequence fails as soon as one write fails; the others
@@ -155,7 +157,7 @@ object CheckpointedExtract {
   val DefaultBuckets = 8
 
   /** The bucket of a row: hash(conv_id) mod `buckets`. Slices the
-    * input for resume and keys the `_lineage` rows. */
+    * input for resume and keys the `lineage` rows. */
   private def bucketOf(buckets: Int): Column = pmod(xxhash64(col("conv_id")), lit(buckets))
 
   /** One row per bucket: a function of the rows alone, whatever the

@@ -197,12 +197,18 @@ class StoreSpec extends AnyFunSuite {
     withRoot("graft-store-lineage") { dir =>
       val store = new ParquetSnapshotStore(dir)
       CheckpointedExtract.run(spark, turns, store, buckets = 4, bucketsPerCommit = 4)
-      val lineage = spark.read.parquet(s"$dir/snapshot=0/_lineage")
-      val metrics = spark.read.parquet(s"$dir/snapshot=0/_metrics")
+      val lineage = spark.read.parquet(s"$dir/snapshot=0/lineage")
+      val metrics = spark.read.parquet(s"$dir/snapshot=0/metrics")
       assert(lineage.agg(sum("n_rows")).head.getLong(0) == turns.count())
       assert(metrics.select("platform").collect().map(_.getString(0)).toSet ==
         Set("article", "forum", "weixin"))
       assert(metrics.agg(sum("n_turns")).head.getLong(0) == turns.count())
+      // a scan of the snapshot directory sees every table: Spark's file
+      // listing skips names that start with `_` or `.`
+      val scanned = spark.read.option("recursiveFileLookup", "true")
+        .parquet(s"$dir/snapshot=0").inputFiles
+        .map(f => new java.io.File(new java.net.URI(f)).getParentFile.getName).toSet
+      assert(scanned == Set("data", "lineage", "metrics"))
     }
   }
 
@@ -222,7 +228,7 @@ class StoreSpec extends AnyFunSuite {
         commitAt(7, b)
         assert(fingerprint(new ParquetSnapshotStore(a).readData(spark)) ==
           fingerprint(new ParquetSnapshotStore(b).readData(spark)))
-        for (snap <- Seq(0, 1); table <- Seq("_lineage", "_metrics"))
+        for (snap <- Seq(0, 1); table <- Seq("lineage", "metrics"))
           assert(rows(s"$a/snapshot=$snap/$table") == rows(s"$b/snapshot=$snap/$table"),
             s"snapshot=$snap/$table")
       }
