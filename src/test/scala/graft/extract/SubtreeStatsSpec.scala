@@ -8,7 +8,8 @@ import scala.util.Random
   * per-element subtree walks they replaced. The walks live only here,
   * as the reference: every element's node score, content score
   * (bit-equal) and validity for all three extractors, the
-  * empty-node removal, and the plain-text renderer.
+  * empty-node removal, and the plain-text renderer. The pages come
+  * from [[RandomPages]].
   */
 class SubtreeStatsSpec extends AnyFunSuite {
 
@@ -130,52 +131,6 @@ class SubtreeStatsSpec extends AnyFunSuite {
       .replaceAll("\n\n").split("\n", -1).map(_.trim).mkString("\n").trim
   }
 
-  // ---- random pages ----
-
-  private val tagPool = Vector("div", "div", "article", "section", "main", "p", "p", "a", "a",
-    "span", "b", "img", "br", "iframe", "video", "script", "style", "textarea", "title",
-    "ul", "ol", "li", "table", "tr", "td", "pre", "code", "h1", "h3", "blockquote")
-  private val classes = Vector("ad", "advertisement", "banner", "comment", "comments",
-    "quote", "cited", "user-info", "author-info", "video_iframe", "advertisement_area",
-    "reward_area", "article", "first-post", "main-post", "reply-content", "content",
-    "SIDEBAR", "rich_media_content", "Post entry")
-  private val ids = Vector("comments", "js_content", "main-content")
-  // whitespace-only runs (incl. U+0001, and U+00A0/U+2003, which trim
-  // keeps), sentence marks, keywords in any case, split across tags
-  // or comments, overlapping ("textext"), and the two chars that
-  // lowercase to ASCII letters outside A-Z (U+0130, U+212A)
-  private val texts = Vector("", " ", "\n\t ", "\u0001 ", "\u00a0", " \u2003 ", "word",
-    "Sentence.", "why? ", "wow！", "。", "con", "tent", "ARTICLE", "art\u0130cle",
-    "\u212Aelvin post", "\u0130", "textext", "MaIn", "a & b < c > d \"q\"",
-    "&amp; &lt;x&gt; &quot;", "<!-- main entry -->", "con<b>tent</b>", "po<!---->st",
-    "x" * 60, "long words without any mark at all in them " * 2, " padded text. ")
-  private val wrappers = Vector("div", "a", "p", "section", "span", "main", "article")
-
-  private def node(r: Random, depth: Int, sb: StringBuilder): Unit =
-    if (depth == 0 || r.nextInt(4) == 0) sb.append(texts(r.nextInt(texts.length)))
-    else {
-      val t = tagPool(r.nextInt(tagPool.length))
-      sb.append('<').append(t)
-      if (r.nextInt(3) == 0) sb.append(" class=\"").append(classes(r.nextInt(classes.length))).append('"')
-      if (r.nextInt(8) == 0) sb.append(" id=\"").append(ids(r.nextInt(ids.length))).append('"')
-      if (r.nextInt(6) == 0) sb.append(" data-x='a & b < c > \"MAIN\"'")
-      sb.append('>')
-      (0 until r.nextInt(4)).foreach(_ => node(r, depth - 1, sb))
-      if (r.nextInt(5) != 0) sb.append("</").append(t).append('>')
-    }
-
-  /** Three blocks, each under a random chain of up to 60 wrappers. */
-  private def page(r: Random): String = {
-    val sb = new StringBuilder("<html><body>")
-    (0 until 3).foreach { _ =>
-      val chain = Vector.fill(r.nextInt(61))(wrappers(r.nextInt(wrappers.length)))
-      chain.foreach(t => sb.append('<').append(t).append('>'))
-      (0 until 1 + r.nextInt(3)).foreach(_ => node(r, 6, sb))
-      chain.reverse.foreach(t => if (r.nextBoolean()) sb.append("</").append(t).append('>'))
-    }
-    sb.append("</body></html>").toString
-  }
-
   private val N = 200
   private val extractors = Seq(new ArticleExtractor, new ForumExtractor, new WeixinExtractor)
 
@@ -183,7 +138,7 @@ class SubtreeStatsSpec extends AnyFunSuite {
     val r = new Random(2024)
     var maxDepth = 0
     (1 to N).foreach { c =>
-      val doc = HtmlParser.parse(page(r))
+      val doc = HtmlParser.parse(RandomPages.page(r))
       extractors.foreach { ex =>
         val s = ex.statsOf(doc)
         (0 until s.size).foreach { i =>
@@ -210,19 +165,26 @@ class SubtreeStatsSpec extends AnyFunSuite {
   test("empty-node removal and the text renderer match their subtree walks") {
     val r = new Random(99)
     val probe = new CleanProbe
+    var containers = 0
     (1 to N).foreach { c =>
-      val html = page(r)
+      val html = RandomPages.page(r)
       val (a, b) = (HtmlParser.parse(html), HtmlParser.parse(html))
       walkCleanEmpty(a)
       probe.clean(b)
       assert(b.outerHtml == a.outerHtml, s"page $c: cleanEmptyNodes")
       assert(TextRenderer.renderFrom(HtmlParser.parse(html)) ==
         walkRenderText(HtmlParser.parse(html)), s"page $c: text")
-      // a div as the root: the root itself is not one of the p/div
-      val (d1, d2) = (HtmlParser.parse(html).select("div").headOption,
-        HtmlParser.parse(html).select("div").headOption)
-      for (x <- d1; y <- d2)
-        assert(TextRenderer.renderFrom(x) == walkRenderText(y), s"page $c: text from a div")
+      // a div, ul or td as the container: the container itself gets no
+      // separators, and only lists and tables inside it count
+      Seq("div", "ul", "td").foreach { tag =>
+        val (d1, d2) = (HtmlParser.parse(html).select(tag).headOption,
+          HtmlParser.parse(html).select(tag).headOption)
+        for (x <- d1; y <- d2) {
+          containers += 1
+          assert(TextRenderer.renderFrom(x) == walkRenderText(y), s"page $c: text from a $tag")
+        }
+      }
     }
+    assert(containers >= 3 * N / 2, containers)
   }
 }
