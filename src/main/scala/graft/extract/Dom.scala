@@ -61,7 +61,7 @@ final class Element(val tag: String) extends DomNode {
       classCacheSrc = cur
       classCache =
         if (cur == null) Nil
-        else Regexes.Ws.split(cur.trim).toList.filter(_.nonEmpty)
+        else Regexes.classTokens(cur)
       classCache
     }
   }
@@ -69,7 +69,7 @@ final class Element(val tag: String) extends DomNode {
   /** cheerio addClass semantics: space-separated tokens, each added
     * once. */
   def addClass(c: String): Unit = {
-    val toAdd = Regexes.Ws.split(c.trim).filter(_.nonEmpty)
+    val toAdd = Regexes.classTokens(c)
     val cur = classNames
     val merged = cur ++ toAdd.filterNot(cur.contains)
     if (merged.nonEmpty) setAttr("class", merged.mkString(" "))
@@ -102,15 +102,33 @@ final class Element(val tag: String) extends DomNode {
   def childElements: Seq[Element] = children.collect { case e: Element => e }.toSeq
 
   /** Visit descendants pre-order (this element excluded) without
-    * iterator/Seq allocation per node — the selector-engine hot path. */
+    * iterator/Seq allocation per node — the selector-engine hot path.
+    * An explicit stack, so nesting depth is not bounded by the thread
+    * stack. */
   def walkElements(f: Element => Unit): Unit = {
-    var i = 0
-    while (i < children.length) {
-      children(i) match {
-        case e: Element => f(e); e.walkElements(f)
-        case _          => ()
+    var parents = new Array[Element](16)
+    var next = new Array[Int](16) // each parent's next child index
+    var top = 0
+    parents(0) = this
+    while (top >= 0) {
+      val p = parents(top)
+      val i = next(top)
+      if (i == p.children.length) top -= 1
+      else {
+        next(top) = i + 1
+        p.children(i) match {
+          case e: Element =>
+            f(e)
+            top += 1
+            if (top == parents.length) {
+              parents = java.util.Arrays.copyOf(parents, 2 * top)
+              next = java.util.Arrays.copyOf(next, 2 * top)
+            }
+            parents(top) = e
+            next(top) = 0
+          case _ => ()
+        }
       }
-      i += 1
     }
   }
 
@@ -165,22 +183,34 @@ object Dom {
 }
 
 private[extract] object Serializer {
-  private def escText(s: String, sb: StringBuilder): Unit = s.foreach {
-    case '&' => sb.append("&amp;")
-    case '<' => sb.append("&lt;")
-    case '>' => sb.append("&gt;")
-    case c   => sb.append(c)
-  }
-  private def escAttr(s: String, sb: StringBuilder): Unit = s.foreach {
-    case '&' => sb.append("&amp;")
-    case '"' => sb.append("&quot;")
-    case c   => sb.append(c)
+  /** Appends `s` with `&` and, in text, `<` and `>` or, in an
+    * attribute value, `"` escaped: the runs between those chars are
+    * appended whole. */
+  private def escape(s: String, sb: StringBuilder, attr: Boolean): Unit = {
+    val out = sb.underlying
+    var from = 0
+    var i = 0
+    while (i < s.length) {
+      val entity = s.charAt(i) match {
+        case '&'          => "&amp;"
+        case '<' if !attr => "&lt;"
+        case '>' if !attr => "&gt;"
+        case '"' if attr  => "&quot;"
+        case _            => null
+      }
+      if (entity != null) {
+        out.append(s, from, i).append(entity)
+        from = i + 1
+      }
+      i += 1
+    }
+    out.append(s, from, s.length)
   }
 
   def write(n: DomNode, sb: StringBuilder): Unit = n match {
     case t: TextNode => t.parent match {
       case p: Element if p != null && Dom.RawTextTags.contains(p.tag) => sb.append(t.data)
-      case _ => escText(t.data, sb)
+      case _ => escape(t.data, sb, attr = false)
     }
     case c: CommentNode => sb.append("<!--").append(c.data).append("-->")
     case e: Element =>
@@ -197,7 +227,7 @@ private[extract] object Serializer {
       sb.append('<').append(e.tag)
       e.attrs.foreach { case (k, v) =>
         sb.append(' ').append(k).append("=\"")
-        escAttr(v, sb)
+        escape(v, sb, attr = true)
         sb.append('"')
       }
       sb.append('>')

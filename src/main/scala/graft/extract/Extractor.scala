@@ -77,9 +77,7 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
 
   // ---- whitespace pre-collapse (every subclass extract,
   //      e.g. ArticleExtractor.ts:161-164) ----
-  def preCollapse(html: String): String =
-    Regexes.collapseWs(
-      html.replace("&nbsp;", " ").replace("&#160;", " ")) // JS \s incl.  
+  def preCollapse(html: String): String = Regexes.collapseWsAndNbsp(html) // JS \s incl. U+00A0
 
   def extract(html: String, url: String): ExtractResult =
     extractDoc(HtmlParser.parse(preCollapse(html)), url)
@@ -97,9 +95,9 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
     val title = TitleExtract.extract(doc)
     val mainContent = extractMainContent()
     postProcess(mainContent)
+    val content = collapseBrRuns(mainContent)
     lastMainContent = mainContent
 
-    val content = mainContent.innerHtml
     val textContent = mainContent.text.trim
     val boilerplate =
       if (origTextLen <= 0) 0.0
@@ -380,51 +378,39 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
       if (tex.nonEmpty) { m.setAttr("data-tex", tex); m.addClass("math-display") }
     }
 
-    def processTextNode(t: TextNode): Unit = {
-      var text = t.data
-      var changed = false
-      def repl(p: java.util.regex.Pattern, mk: String => String): Unit = {
-        val m = p.matcher(text)
-        if (m.find()) {
-          changed = true
-          val sb = new StringBuilder
-          var last = 0
-          do {
-            sb.append(text.substring(last, m.start())).append(mk(m.group(1)))
-            last = m.end()
-          } while (m.find())
-          sb.append(text.substring(last))
-          text = sb.toString
-        }
-      }
-      repl(Regexes.MathInline,
-        f => s"""<span class="math-inline" data-tex="$f">$$$f$$</span>""")
-      repl(Regexes.MathDisplay,
-        f => s"""<div class="math-display" data-tex="$f">$$$$$f$$$$</div>""")
-      repl(Regexes.MathEquation,
-        f => s"""<div class="math-display" data-tex="$f">\\begin{equation}$f\\end{equation}</div>""")
-      repl(Regexes.MathAlign,
-        f => s"""<div class="math-display" data-tex="$f">\\begin{align}$f\\end{align}</div>""")
-      if (changed) {
-        val parent = t.parent
-        if (parent != null) {
-          val idx = parent.childIndex(t)
-          t.remove()
-          val nodes = HtmlParser.parseFragment(text)
-          nodes.zipWithIndex.foreach { case (n, k) => parent.insertChild(idx + k, n) }
-        }
+    // pre-order over the nodes present on arrival, with an explicit
+    // stack: a text node whose markup changes is replaced in its parent
+    // by the parsed markup, which is not visited
+    var parents = new Array[Element](16)
+    var next = new Array[Int](16) // each parent's next child index
+    var top = 0
+    parents(0) = elem
+    while (top >= 0) {
+      val p = parents(top)
+      val i = next(top)
+      if (i == p.children.length) top -= 1
+      else p.children(i) match {
+        case t: TextNode =>
+          val text = Regexes.markupMath(t.data)
+          if (text eq t.data) next(top) = i + 1
+          else {
+            val nodes = HtmlParser.parseFragment(text)
+            t.remove()
+            nodes.zipWithIndex.foreach { case (n, k) => p.insertChild(i + k, n) }
+            next(top) = i + nodes.length
+          }
+        case c: Element =>
+          next(top) = i + 1
+          top += 1
+          if (top == parents.length) {
+            parents = java.util.Arrays.copyOf(parents, 2 * top)
+            next = java.util.Arrays.copyOf(next, 2 * top)
+          }
+          parents(top) = c
+          next(top) = 0
+        case _ => next(top) = i + 1
       }
     }
-
-    def traverse(e: Element): Unit = {
-      val snapshot = e.children.toList
-      snapshot.foreach {
-        case t: TextNode => processTextNode(t)
-        case c: Element  => traverse(c)
-        case _           => ()
-      }
-    }
-    traverse(elem)
   }
 
   /** BaseExtractor.ts:506-542 */
@@ -443,12 +429,19 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
     elem.select(".sidenote, .marginnote").foreach(_.addClass("content-sidenote"))
   }
 
-  /** `(\s*<br\s*\/?>\s*){3,}` → `<br><br>` on serialized inner HTML
-    * (every subclass postProcess tail). */
-  protected def collapseBrRuns(elem: Element): Unit = {
+  /** `(\s*<br\s*\/?>\s*){3,}` → `<br><br>` on serialized inner HTML,
+    * the tail of every reference extractor's postProcess, run by
+    * [[extractDoc]] after [[postProcess]]. Returns the final inner
+    * HTML: the serialization it scanned when nothing collapsed, which
+    * is the common case. */
+  private def collapseBrRuns(elem: Element): String = {
     val html = elem.innerHtml
-    val replaced = Regexes.BrRuns.matcher(html).replaceAll("<br><br>")
-    if (replaced != html) setInnerHtml(elem, replaced)
+    val replaced = Regexes.collapseBrRuns(html)
+    if (replaced eq html) html
+    else {
+      setInnerHtml(elem, replaced)
+      elem.innerHtml
+    }
   }
 
   /** Shared subclass helper: `\n`→`<br>` in pre/code + a class. */

@@ -1,7 +1,7 @@
 package graft.extract
 
 import java.util.Locale
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, HashMap}
 
 /** Lenient HTML5-ish parser: never throws, handles unclosed /
   * mismatched tags, raw-text elements, comments, entities, and
@@ -42,6 +42,9 @@ object HtmlParser {
   private def parseNodes(html: String): Element = {
     val root = new Element("#root")
     val stack = ArrayBuffer[Element](root)
+    // how many elements of each name are open (root excluded), so that
+    // a close tag with no open match costs O(1)
+    val open = HashMap.empty[String, Int].withDefaultValue(0)
     val n = html.length
     var i = 0
     // java StringBuilder: has append(CharSequence, start, end) — the
@@ -49,6 +52,9 @@ object HtmlParser {
     val text = new java.lang.StringBuilder
 
     def cur: Element = stack.last
+
+    def push(e: Element): Unit = { stack += e; open(e.tag) += 1 }
+    def pop(): Unit = open(stack.remove(stack.length - 1).tag) -= 1
 
     def flushText(): Unit = {
       if (text.length > 0) {
@@ -70,7 +76,7 @@ object HtmlParser {
         case _                          => false
       }
       if (close && stack.length > 1) {
-        stack.remove(stack.length - 1)
+        pop()
         autoClose(tag)
       }
     }
@@ -92,7 +98,7 @@ object HtmlParser {
         while (i < n && html.charAt(i) != '>') i += 1
         if (i < n) i += 1
       }
-      if (stack.length > 1) stack.remove(stack.length - 1)
+      if (stack.length > 1) pop()
     }
 
     while (i < n) {
@@ -127,9 +133,9 @@ object HtmlParser {
           while (j < n && html.charAt(j) != '>') j += 1
           val name = html.substring(i + 2, j).trim.toLowerCase(Locale.ROOT)
             .takeWhile(ch => ch.isLetterOrDigit || ch == '-' || ch == ':')
-          if (name.nonEmpty && stack.exists(e => e.tag == name && (e ne root))) {
-            while (stack.length > 1 && cur.tag != name) stack.remove(stack.length - 1)
-            if (stack.length > 1) stack.remove(stack.length - 1)
+          if (name.nonEmpty && open(name) > 0) {
+            while (cur.tag != name) pop()
+            pop()
           } // else: stray close tag, ignored
           i = if (j < n) j + 1 else n
         } else if (c1.isLetter) {
@@ -139,7 +145,7 @@ object HtmlParser {
           autoClose(elem.tag)
           cur.appendChild(elem)
           if (!selfClosed && !Dom.VoidTags.contains(elem.tag)) {
-            stack += elem
+            push(elem)
             if (Dom.RawTextTags.contains(elem.tag)) readRawText(elem.tag)
           }
         } else { text.append(c); i += 1 }

@@ -77,7 +77,6 @@ class ArticleExtractor extends BaseExtractor(
       if (p.text.trim.isEmpty && p.select("img, video, iframe").isEmpty)
         p.remove()
     }
-    collapseBrRuns(element)
   }
 
   private val AuthorSelectors = Seq(
@@ -128,7 +127,6 @@ class ForumExtractor extends BaseExtractor(
     element.select(Quotes).foreach(_.addClass("forum-quote"))
     recodeCodeBlocks(element, "forum-code")
     wrapImages(element, "forum-image-container", Some("forum-image-caption"))
-    collapseBrRuns(element)
   }
 
   private val TimeSelectors = Seq(
@@ -186,7 +184,6 @@ class WeixinExtractor extends BaseExtractor(
     wrapImages(element, "weixin-img-container", None)
     element.select("iframe").foreach(
       _.wrap(Dom.element("div", "class" -> "weixin-video-container")))
-    collapseBrRuns(element)
   }
 
   private val AuthorSelectors = Seq(
@@ -237,10 +234,11 @@ final class ExtractorSet {
 
   /** Total per-turn extraction: guards become Left (quarantine row),
     * never a thrown task failure (route.ts error semantics mapped to
-    * row-level errors, SURVEY.md §2.1). Scoring, empty-node removal
-    * and the renderers' blank tests are iterative and linear in the
-    * page; the remaining recursive DOM walks (text, select, serializer,
-    * normalization, post-processing) overflow the stack on
+    * row-level errors, SURVEY.md §2.1). Scoring, empty-node removal,
+    * selection, the math pass and the text renderer are iterative and
+    * linear in the page; the remaining recursive DOM walks (text,
+    * serializer, normalization, attribute cleanup, markdown's inline
+    * elements) overflow the stack on
     * pathologically deep nesting (thousands of unclosed `<div>`s);
     * that is quarantined too, with a fixed message because
     * StackOverflowError carries none.
@@ -260,12 +258,11 @@ final class ExtractorSet {
           Left("No content could be extracted from the page")
         else if (!renderFormats) Right(result)
         else {
-          // render straight off the DOM (no content re-parse);
-          // markdown first (read-only walk), text second (mutates)
+          // render straight off the DOM (no content re-parse); both
+          // renderers only read it
           val main = extractor.lastMainContent
-          val md = MarkdownRenderer.renderFrom(main)
-          val txt = TextRenderer.renderFrom(main)
-          Right(result.copy(markdown = md, textFormat = txt))
+          Right(result.copy(markdown = MarkdownRenderer.renderFrom(main),
+            textFormat = TextRenderer.renderFrom(main)))
         }
       }
     } catch {

@@ -5,69 +5,106 @@ import scala.collection.mutable.ArrayBuffer
 /** Plain-text rendering of extracted content HTML — reference
   * `extractText` (/root/reference/app/api/extract/route.ts:12-72).
   *
-  * The reference inserts structural separators (blank lines around
-  * headings/paragraphs, `• ` bullets, tab-separated cells,
-  * `<br>`→`\n`) and THEN collapses ALL whitespace to single spaces
-  * (route.ts:63) — so the effective output is one space-collapsed
-  * line with bullets/space separators (SURVEY.md §0
-  * "text-format-single-line"). Implemented by replicating the DOM
-  * mutations, taking body text, then applying the same final chain.
+  * The reference inserts structural separators into the DOM (blank
+  * lines around headings/paragraphs, `• ` bullets, tab-separated
+  * cells, `<br>`→`\n`), takes the body text and THEN collapses ALL
+  * whitespace to single spaces (route.ts:63) — so the effective output
+  * is one space-collapsed line with bullets/space separators
+  * (SURVEY.md §0 "text-format-single-line"). Its later newline steps
+  * (route.ts:64-69) are no-ops once no `\n` survives, which leaves a
+  * trim. Here one read-only walk emits the text and the separators in
+  * document order, then collapses and trims.
   */
 object TextRenderer {
 
   def render(contentHtml: String): String =
     renderFrom(HtmlParser.parse(contentHtml))
 
+  private val Skipped = Set("script", "style", "link", "meta")
+  private val Headings = Set("h1", "h2", "h3", "h4", "h5", "h6")
+
   /** Render directly from a DOM container (the extraction job's hot
-    * path — avoids re-parsing the serialized content). MUTATES the
-    * container; pass a clone if it is still needed. */
+    * path — avoids re-parsing the serialized content). The separators
+    * are the reference's, below the container:
+    *  - `script`/`style`/`link`/`meta` subtrees are dropped;
+    *  - `\n\n` around a heading, list or table, `\n` after a list, a
+    *    `tr` under a `table`, and each `li`;
+    *  - `\n\n` after a `p`/`div` whose text holds a char above U+0020;
+    *  - one `• ` before an `li` per `ul`/`ol` it is under;
+    *  - `\t` after a `td`/`th` under a `tr` under a `table`;
+    *  - `\n` for a `<br>`.
+    * Only the first descendant `body`, if there is one, is rendered;
+    * the counts above still include its ancestors. Separators are
+    * whitespace apart from the bullets, so each element's separators
+    * only need to be on the right side of its text. */
   def renderFrom(doc: Element): String = {
-    doc.select("script, style, link, meta").foreach(_.remove())
-
-    def insertAround(e: Element, before: Option[String], after: Option[String]): Unit = {
-      val p = e.parent
-      if (p != null) {
-        val i = p.childIndex(e)
-        after.foreach(a => p.insertChild(i + 1, new TextNode(a)))
-        before.foreach(b => p.insertChild(i, new TextNode(b)))
+    val sb = new java.lang.StringBuilder
+    var bodyFound = false
+    var lists, tables, rows = 0 // ul/ol, table, and tr-under-table ancestors
+    var visible = 0 // text nodes so far that hold a char above U+0020
+    // open elements below doc, with `visible` at their start
+    var open = new Array[Element](16)
+    var seen = new Array[Int](16)
+    var next = new Array[Int](16)
+    var top = 0
+    open(0) = doc
+    while (top >= 0) {
+      val p = open(top)
+      val i = next(top)
+      if (i == p.children.length) {
+        top -= 1
+        if (top >= 0) p.tag match { // close p
+          case "ul" | "ol" => lists -= 1; sb.append('\n')
+          case "table"     => tables -= 1; sb.append("\n\n")
+          case "tr" if tables > 0 => rows -= 1; sb.append('\n')
+          case "li" if lists > 0 => sb.append('\n')
+          case "td" | "th" if rows > 0 => sb.append('\t')
+          case "p" | "div" if visible > seen(top + 1) => sb.append("\n\n")
+          case t if Headings.contains(t) => sb.append("\n\n")
+          case _ => ()
+        }
+      } else {
+        next(top) = i + 1
+        p.children(i) match {
+          case t: TextNode =>
+            val d = t.data
+            var k = 0
+            while (k < d.length && d.charAt(k) <= ' ') k += 1
+            if (k < d.length) visible += 1
+            sb.append(d)
+          case e: Element if Skipped.contains(e.tag) => ()
+          case e: Element if e.tag == "br" => sb.append('\n')
+          case e: Element =>
+            e.tag match { // open e
+              case "ul" | "ol" => sb.append("\n\n"); lists += 1
+              case "table"     => sb.append("\n\n"); tables += 1
+              case "tr" if tables > 0 => rows += 1
+              case "li" => (0 until lists).foreach(_ => sb.append("\u2022 "))
+              case "body" if !bodyFound =>
+                bodyFound = true
+                sb.setLength(0)
+                // the body's text is all that is rendered: walk it as
+                // the only open element, with the counts of its
+                // ancestors
+                top = -1
+              case t if Headings.contains(t) => sb.append("\n\n")
+              case _ => ()
+            }
+            top += 1
+            if (top == open.length) {
+              open = java.util.Arrays.copyOf(open, 2 * top)
+              seen = java.util.Arrays.copyOf(seen, 2 * top)
+              next = java.util.Arrays.copyOf(next, 2 * top)
+            }
+            open(top) = e
+            seen(top) = visible
+            next(top) = 0
+          case _ => ()
+        }
       }
     }
-
-    // p/div blankness, taken once: every node inserted before or
-    // during the p/div step is whitespace, so no verdict changes
-    val stats = new SubtreeStats(doc, Nil)
-    doc.select("h1, h2, h3, h4, h5, h6").foreach(h =>
-      insertAround(h, Some("\n\n"), Some("\n\n")))
-    (1 until stats.size).foreach { i =>
-      val e = stats.element(i)
-      if ((e.tag == "p" || e.tag == "div") && !stats.isBlank(i))
-        insertAround(e, None, Some("\n\n"))
-    }
-    doc.select("br").foreach { br =>
-      val p = br.parent
-      if (p != null) p.replaceChild(br, new TextNode("\n"))
-    }
-    doc.select("ul, ol").foreach { list =>
-      insertAround(list, Some("\n\n"), Some("\n"))
-      list.select("li").foreach(li => insertAround(li, Some("• "), Some("\n")))
-    }
-    doc.select("table").foreach { table =>
-      table.select("tr").foreach { tr =>
-        tr.select("td, th").foreach(cell => insertAround(cell, None, Some("\t")))
-        insertAround(tr, None, Some("\n"))
-      }
-      insertAround(table, Some("\n\n"), Some("\n\n"))
-    }
-
-    val body = doc.select("body").headOption.getOrElse(doc)
-    val collapsed = Regexes.collapseWs(body.text)
-    // route.ts:64-69 — no-ops after the full collapse, kept for parity
-    DblNl.matcher(collapsed).replaceAll("\n\n")
-      .split("\n", -1).map(_.trim).mkString("\n")
-      .trim
+    Regexes.collapseWs(sb.toString).trim
   }
-
-  private val DblNl = java.util.regex.Pattern.compile("\\n\\s*\\n")
 }
 
 /** HTML → Markdown — reference `convertToMarkdown`
@@ -91,10 +128,8 @@ object MarkdownRenderer {
     val body = doc.select("body").headOption.getOrElse(doc)
     val out = renderChildren(body)
     // turndown trims and collapses 3+ newlines
-    NlRuns.matcher(out).replaceAll("\n\n").trim
+    Regexes.collapseNewlineRuns(out).trim
   }
-
-  private val NlRuns = java.util.regex.Pattern.compile("\\n{3,}")
 
   private def renderChildren(e: Element): String = {
     val sb = new StringBuilder
@@ -112,7 +147,7 @@ object MarkdownRenderer {
       val it = open.last
       if (!it.hasNext) open.remove(open.length - 1)
       else it.next() match {
-        case t: TextNode    => sb.append(escapeText(t.data))
+        case t: TextNode    => sb.append(Regexes.escapeMarkdown(t.data))
         case _: CommentNode => ()
         case c: Element =>
           val out = renderElement(c)
@@ -192,10 +227,4 @@ object MarkdownRenderer {
 
   private def wrapNonEmpty(s: String, mark: String): String =
     if (s.isEmpty) "" else mark + s + mark
-
-  private val EscPattern = java.util.regex.Pattern.compile("([*_`\\[\\]])")
-
-  /** Turndown-style escaping of markdown-significant leading chars. */
-  private def escapeText(s: String): String =
-    EscPattern.matcher(s.replace("\\", "\\\\")).replaceAll("\\\\$1")
 }

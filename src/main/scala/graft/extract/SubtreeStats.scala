@@ -131,7 +131,7 @@ final class SubtreeStats(root: Element, selectors: Seq[String]) {
     if (a == l) b = l
     else while (s.charAt(l - 1 - b) <= ' ') b += 1
     append(textLen, textLead, textTrail, i, l, a, b)
-    if (!mark(i)) mark(i) = Regexes.Punct.matcher(s).find()
+    if (!mark(i)) mark(i) = Regexes.hasSentenceMark(s)
   }
 
   def size: Int = n

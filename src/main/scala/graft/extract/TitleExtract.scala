@@ -91,7 +91,7 @@ object TitleExtract {
   def cleanTitle(title: String): String = {
     var t = Regexes.collapseWs(title)
     t = Regexes.TitleSep.matcher(t).replaceFirst("")
-    t = Regexes.TitleBracket.matcher(t).replaceAll(" ")
+    t = Regexes.blankBrackets(t)
     t = Regexes.TitleTag.matcher(t).replaceAll("")
     t = Regexes.TitleSpecial.matcher(t).replaceAll("")
     t.trim

@@ -17,6 +17,8 @@ class SubtreeStatsSpec extends AnyFunSuite {
 
   // ---- the walks the stats replaced ----
 
+  private val Punct = java.util.regex.Pattern.compile("[.\u3002!\uff01?\uff1f]")
+
   private def textLen(e: Element): Int = e.text.trim.length
   private def firstLinkLen(e: Element): Int = e.select("a").headOption.map(textLen).getOrElse(0)
   private def has(e: Element, sel: String): Boolean = e.select(sel).nonEmpty
@@ -71,7 +73,7 @@ class SubtreeStatsSpec extends AnyFunSuite {
     e.select("p").foreach { p =>
       val t = p.text.trim
       if (t.length > 50) pScore += 2
-      if (Regexes.Punct.matcher(t).find()) pScore += 1
+      if (Punct.matcher(t).find()) pScore += 1
     }
     score += math.min(pScore, 30)
     score += (if (has(e, "img")) 5 else 0)
