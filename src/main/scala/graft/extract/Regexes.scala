@@ -41,8 +41,7 @@ private[extract] object Regexes {
 
   private def collapse(s: String, nbsp: Boolean): String = {
     val n = s.length
-    var sb: java.lang.StringBuilder = null
-    var from = 0 // s(from until i) is still to be copied
+    val out = new Edits(s)
     var i = 0
     while (i < n) {
       val c = s.charAt(i)
@@ -58,16 +57,12 @@ private[extract] object Regexes {
         }
         if (j == i) i += 1
         else {
-          if (j > i + 1 || c != ' ') { // a lone ' ' stays as it is
-            if (sb == null) sb = new java.lang.StringBuilder(n)
-            sb.append(s, from, i).append(' ')
-            from = j
-          }
+          if (j > i + 1 || c != ' ') out.replace(i, j, " ") // a lone ' ' stays
           i = j
         }
       }
     }
-    if (sb == null) s else sb.append(s, from, n).toString
+    out.result
   }
 
   /** `(\s*<br\s*\/?>\s*){3,}` → `<br><br>`. A run starts with the
@@ -78,8 +73,7 @@ private[extract] object Regexes {
     var at = html.indexOf("<br")
     while (at >= 0 && seen < 3) { seen += 1; at = html.indexOf("<br", at + 3) }
     if (seen < 3) return html
-    var sb: java.lang.StringBuilder = null
-    var from = 0
+    val out = new Edits(html)
     var q = html.indexOf("<br")
     while (q >= 0) {
       var tags = 0
@@ -92,14 +86,12 @@ private[extract] object Regexes {
       }
       if (tags >= 3) {
         var start = q
-        while (start > from && isAsciiWs(html.charAt(start - 1))) start -= 1
-        if (sb == null) sb = new java.lang.StringBuilder(html.length)
-        sb.append(html, from, start).append("<br><br>")
-        from = end
+        while (start > out.lastEnd && isAsciiWs(html.charAt(start - 1))) start -= 1
+        out.replace(start, end, "<br><br>")
         q = html.indexOf("<br", end)
       } else q = html.indexOf("<br", q + 1)
     }
-    if (sb == null) html else sb.append(html, from, html.length).toString
+    out.result
   }
 
   /** The end of `<br\s*\/?>\s*` at `p`, where `html` holds `<br`, or -1. */
@@ -140,8 +132,7 @@ private[extract] object Regexes {
     * `close` after it, no later one has either, so the scan stops. */
   private def replaceDelimited(s: String, open: String, close: String, dollarFree: Boolean,
                                mk: String => String): String = {
-    var sb: java.lang.StringBuilder = null
-    var from = 0
+    val out = new Edits(s)
     var i = s.indexOf(open)
     while (i >= 0) {
       val b = i + open.length
@@ -149,13 +140,11 @@ private[extract] object Regexes {
       if (j < 0) i = -1
       else if (dollarFree && (j == b || !s.startsWith(close, j))) i = s.indexOf(open, i + 1)
       else {
-        if (sb == null) sb = new java.lang.StringBuilder(s.length + 64)
-        sb.append(s, from, i).append(mk(s.substring(b, j)))
-        from = j + close.length
-        i = s.indexOf(open, from)
+        out.replace(i, j + close.length, mk(s.substring(b, j)))
+        i = s.indexOf(open, j + close.length)
       }
     }
-    if (sb == null) s else sb.append(s, from, s.length).toString
+    out.result
   }
 
   @inline private def isMarkdownSpecial(c: Char): Boolean =
@@ -164,36 +153,26 @@ private[extract] object Regexes {
   /** `\` → `\\`, then `([*_`\[\]])` → `\$1`: a backslash before each of
     * the six chars. */
   def escapeMarkdown(s: String): String = {
-    var sb: java.lang.StringBuilder = null
-    var from = 0
+    val out = new Edits(s)
     var i = 0
     while (i < s.length) {
-      if (isMarkdownSpecial(s.charAt(i))) {
-        if (sb == null) sb = new java.lang.StringBuilder(s.length + 16)
-        sb.append(s, from, i).append('\\')
-        from = i
-      }
+      if (isMarkdownSpecial(s.charAt(i))) out.replace(i, i, "\\")
       i += 1
     }
-    if (sb == null) s else sb.append(s, from, s.length).toString
+    out.result
   }
 
   /** `\n{3,}` → `\n\n`. */
   def collapseNewlineRuns(s: String): String = {
-    var sb: java.lang.StringBuilder = null
-    var from = 0
+    val out = new Edits(s)
     var i = s.indexOf('\n')
     while (i >= 0) {
       var j = i + 1
       while (j < s.length && s.charAt(j) == '\n') j += 1
-      if (j - i >= 3) {
-        if (sb == null) sb = new java.lang.StringBuilder(s.length)
-        sb.append(s, from, i).append("\n\n")
-        from = j
-      }
+      if (j - i >= 3) out.replace(i, j, "\n\n")
       i = s.indexOf('\n', j)
     }
-    if (sb == null) s else sb.append(s, from, s.length).toString
+    out.result
   }
 
   /** `[.。!！?？]` occurs in `s`. */
@@ -234,8 +213,7 @@ private[extract] object Regexes {
     * on that line, so the scan resumes at the line end. */
   def blankBrackets(s: String): String = {
     val n = s.length
-    var sb: java.lang.StringBuilder = null
-    var from = 0
+    val out = new Edits(s)
     var q = 0
     while (q < n && !isOpener(s.charAt(q))) q += 1
     while (q < n) {
@@ -243,16 +221,32 @@ private[extract] object Regexes {
       while (c < n && !isCloser(s.charAt(c)) && !isLineEnd(s.charAt(c))) c += 1
       if (c < n && isCloser(s.charAt(c))) {
         var start = q
-        while (start > from && isAsciiWs(s.charAt(start - 1))) start -= 1
+        while (start > out.lastEnd && isAsciiWs(s.charAt(start - 1))) start -= 1
         var end = c + 1
         while (end < n && isAsciiWs(s.charAt(end))) end += 1
-        if (sb == null) sb = new java.lang.StringBuilder(n)
-        sb.append(s, from, start).append(' ')
-        from = end
+        out.replace(start, end, " ")
         q = end
       } else q = c
       while (q < n && !isOpener(s.charAt(q))) q += 1
     }
-    if (sb == null) s else sb.append(s, from, n).toString
+    out.result
+  }
+
+  /** `s` with disjoint ranges replaced, in left-to-right order: each
+    * scanner's output. It is `s` itself when nothing was replaced. */
+  private final class Edits(s: String) {
+    private var sb: java.lang.StringBuilder = null
+    private var last = 0
+
+    /** The end of the last replaced range, 0 before the first. */
+    def lastEnd: Int = last
+
+    def replace(start: Int, end: Int, by: String): Unit = {
+      if (sb == null) sb = new java.lang.StringBuilder(s.length + 16)
+      sb.append(s, last, start).append(by)
+      last = end
+    }
+
+    def result: String = if (sb == null) s else sb.append(s, last, s.length).toString
   }
 }

@@ -27,8 +27,9 @@ object TextRenderer {
     * path — avoids re-parsing the serialized content). The separators
     * are the reference's, below the container:
     *  - `script`/`style`/`link`/`meta` subtrees are dropped;
-    *  - `\n\n` around a heading, list or table, `\n` after a list, a
-    *    `tr` under a `table`, and each `li`;
+    *  - `\n\n` around a heading or table and before a list;
+    *  - `\n` after a list, a `tr` under a `table`, and an `li` under a
+    *    list;
     *  - `\n\n` after a `p`/`div` whose text holds a char above U+0020;
     *  - one `• ` before an `li` per `ul`/`ol` it is under;
     *  - `\t` after a `td`/`th` under a `tr` under a `table`;
