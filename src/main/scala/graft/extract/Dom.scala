@@ -102,33 +102,15 @@ final class Element(val tag: String) extends DomNode {
   def childElements: Seq[Element] = children.collect { case e: Element => e }.toSeq
 
   /** Visit descendants pre-order (this element excluded) without
-    * iterator/Seq allocation per node — the selector-engine hot path.
-    * An explicit stack, so nesting depth is not bounded by the thread
-    * stack. */
+    * iterator/Seq allocation per node — the selector-engine hot path. */
   def walkElements(f: Element => Unit): Unit = {
-    var parents = new Array[Element](16)
-    var next = new Array[Int](16) // each parent's next child index
-    var top = 0
-    parents(0) = this
-    while (top >= 0) {
-      val p = parents(top)
-      val i = next(top)
-      if (i == p.children.length) top -= 1
-      else {
-        next(top) = i + 1
-        p.children(i) match {
-          case e: Element =>
-            f(e)
-            top += 1
-            if (top == parents.length) {
-              parents = java.util.Arrays.copyOf(parents, 2 * top)
-              next = java.util.Arrays.copyOf(next, 2 * top)
-            }
-            parents(top) = e
-            next(top) = 0
-          case _ => ()
-        }
+    var i = 0
+    while (i < children.length) {
+      children(i) match {
+        case e: Element => f(e); e.walkElements(f)
+        case _          => ()
       }
+      i += 1
     }
   }
 

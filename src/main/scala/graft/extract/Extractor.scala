@@ -369,18 +369,17 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
     * `$…$` regex BEFORE `$$…$$`, so display math is consumed as two
     * inline matches first (order-sensitive, bug-compatible). */
   protected def processMathFormulas(elem: Element): Unit = {
-    elem.select("span.math-inline, .MathJax_Preview").foreach { m =>
+    def tagTex(m: Element, cls: String): Unit = {
       val tex = m.text.trim
-      if (tex.nonEmpty) { m.setAttr("data-tex", tex); m.addClass("math-inline") }
+      if (tex.nonEmpty) { m.setAttr("data-tex", tex); m.addClass(cls) }
     }
-    elem.select("div.math-display, .MathJax_Display").foreach { m =>
-      val tex = m.text.trim
-      if (tex.nonEmpty) { m.setAttr("data-tex", tex); m.addClass("math-display") }
-    }
-
-    // pre-order over the nodes present on arrival, with an explicit
-    // stack: a text node whose markup changes is replaced in its parent
-    // by the parsed markup, which is not visited
+    // The reference tags the rendered-math elements in two selects and
+    // then marks up the text nodes. This is one pre-order walk with an
+    // explicit stack over the nodes present on arrival, with the same
+    // result: tagging changes no element's text and no other element's
+    // match, and an element's text is taken before its descendants'
+    // text nodes are marked up. A marked-up text node is replaced in
+    // its parent by the parsed markup, which is not visited.
     var parents = new Array[Element](16)
     var next = new Array[Int](16) // each parent's next child index
     var top = 0
@@ -400,6 +399,8 @@ class BaseExtractor(val options: ExtractOptions = ExtractOptions(),
             next(top) = i + nodes.length
           }
         case c: Element =>
+          if (MathInlineTags(c)) tagTex(c, "math-inline")
+          if (MathDisplayTags(c)) tagTex(c, "math-display")
           next(top) = i + 1
           top += 1
           if (top == parents.length) {
@@ -522,6 +523,8 @@ private object BaseExtractor {
   val Media = "img, video, iframe"
   val BaseCounted: Seq[String] = Seq(Img, P, Headings, Table, Lists, Code)
   val CandidateTags: Set[String] = Set("div", "article", "section", "main")
+  val MathInlineTags: Element => Boolean = Selector.compoundList("span.math-inline, .MathJax_Preview")
+  val MathDisplayTags: Element => Boolean = Selector.compoundList("div.math-display, .MathJax_Display")
   val ContentKeywords: Seq[String] = Seq("article", "content", "post", "entry", "main", "text")
 
   /** BaseExtractor.ts:326-360 */

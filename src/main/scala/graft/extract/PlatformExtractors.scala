@@ -235,8 +235,8 @@ final class ExtractorSet {
   /** Total per-turn extraction: guards become Left (quarantine row),
     * never a thrown task failure (route.ts error semantics mapped to
     * row-level errors, SURVEY.md §2.1). Scoring, empty-node removal,
-    * selection, the math pass and the text renderer are iterative and
-    * linear in the page; the remaining recursive DOM walks (text,
+    * the math pass and the text renderer are iterative and linear in
+    * the page; the remaining recursive DOM walks (text, select,
     * serializer, normalization, attribute cleanup, markdown's inline
     * elements) overflow the stack on
     * pathologically deep nesting (thousands of unclosed `<div>`s);

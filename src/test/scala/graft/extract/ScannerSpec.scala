@@ -102,6 +102,60 @@ class ScannerSpec extends AnyFunSuite {
       Regexes.markupMath, mathSpec)
   }
 
+  /** The old math pass over a DOM: two selects tag the rendered-math
+    * elements, then a recursive walk over snapshots of each element's
+    * children marks up the text nodes. */
+  private def mathPassSpec(elem: Element): Unit = {
+    def tagTex(sel: String, cls: String): Unit = elem.select(sel).foreach { m =>
+      val tex = m.text.trim
+      if (tex.nonEmpty) { m.setAttr("data-tex", tex); m.addClass(cls) }
+    }
+    tagTex("span.math-inline, .MathJax_Preview", "math-inline")
+    tagTex("div.math-display, .MathJax_Display", "math-display")
+    def traverse(e: Element): Unit = e.children.toList.foreach {
+      case t: TextNode =>
+        val text = mathSpec(t.data)
+        if (text != t.data) {
+          val idx = e.childIndex(t)
+          t.remove()
+          HtmlParser.parseFragment(text).zipWithIndex.foreach { case (n, k) => e.insertChild(idx + k, n) }
+        }
+      case c: Element => traverse(c)
+      case _          => ()
+    }
+    traverse(elem)
+  }
+
+  private class MathProbe extends BaseExtractor() {
+    def math(e: Element): Unit = processMathFormulas(e)
+  }
+
+  test("the math pass over a DOM") {
+    val r = new Random(9)
+    val classes = Vector("math-inline", "MathJax_Preview", "math-display", "MathJax_Display")
+    val probe = new MathProbe
+    var tagged, marked = 0
+    (1 to 300).foreach { c =>
+      val html = RandomPages.page(r)
+      val seed = r.nextLong()
+      // the same rendered-math classes on both copies
+      def parse(): Element = {
+        val doc = HtmlParser.parse(html)
+        val cr = new Random(seed)
+        doc.descendants.foreach(e => if (cr.nextInt(4) == 0) e.addClass(classes(cr.nextInt(4))))
+        doc
+      }
+      val (a, b) = (parse(), parse())
+      mathPassSpec(a)
+      probe.math(b)
+      val out = b.outerHtml
+      assert(out == a.outerHtml, s"page $c")
+      if (out.contains("data-tex")) tagged += 1
+      if (out.contains("\\end{equation}</div>")) marked += 1
+    }
+    assert(tagged >= 100 && marked >= 10, s"tagged $tagged, marked $marked")
+  }
+
   test("markdown escapes and newline runs") {
     differential(3, found(Pattern.compile("[\\\\*_`\\[\\]]")))(Regexes.escapeMarkdown,
       s => EscPattern.matcher(s.replace("\\", "\\\\")).replaceAll("\\\\$1"))
